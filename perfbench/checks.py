@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+from datetime import datetime, timezone
 
 
 def parquet_files(path: str) -> list[str]:
@@ -29,14 +30,17 @@ def checkpoint_split(path: str) -> tuple[int, int]:
     return parsed, total - parsed
 
 
-def dir_usage(path: str) -> tuple[float, int]:
-    """(MB on disk, data files) under ``path``."""
-    size, files = 0, 0
+def dir_usage(path: str) -> tuple[float, int, int]:
+    """(MB on disk, data files, lineage commits) under ``path``."""
+    size, files, commits = 0, 0, 0
     for root, _dirs, names in os.walk(path):
         for n in names:
             size += os.path.getsize(os.path.join(root, n))
-            files += n.endswith(".parquet")
-    return size / 1e6, files
+            if os.path.basename(root) == "_lineage":
+                commits += n.startswith("commit-")
+            else:
+                files += n.endswith(".parquet")
+    return size / 1e6, files, commits
 
 
 def _norm(v) -> str:
@@ -44,6 +48,12 @@ def _norm(v) -> str:
     # so compare at 9 significant digits (as tests/test_stage_materialize)
     if isinstance(v, float):
         return f"{v:.9g}"
+    if isinstance(v, datetime):
+        # Spark's INT96 timestamps read back naive, pyarrow's tz-aware;
+        # both are UTC
+        if v.tzinfo is not None:
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
+        return v.isoformat()
     if isinstance(v, dict):
         return "{" + ",".join(f"{k}:{_norm(x)}"
                               for k, x in sorted(v.items())) + "}"

@@ -21,6 +21,23 @@ import time
 _PR_SET_CHILD_SUBREAPER = 36
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(busy, stolen) CPU ticks of the whole machine so far, from
+    /proc/stat: busy is user + nice + system + irq + softirq, stolen is
+    the time the hypervisor ran something else while a vCPU had work."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:9]]
+    user, nice, system, _idle, _iowait, irq, softirq, steal = v
+    return user + nice + system + irq + softirq, steal
+
+
+def stolen_share(t0: tuple[int, int], t1: tuple[int, int]) -> float:
+    """Share of the vCPUs' runnable time the hypervisor stole between
+    two ``cpu_ticks`` readings."""
+    busy, stolen = t1[0] - t0[0], t1[1] - t0[1]
+    return stolen / (busy + stolen) if busy + stolen > 0 else 0.0
+
+
 def become_subreaper() -> None:
     libc = ctypes.CDLL(None, use_errno=True)
     libc.prctl.argtypes = [ctypes.c_int, ctypes.c_ulong, ctypes.c_ulong,
@@ -101,6 +118,7 @@ class Child:
     def __init__(self, argv: list[str], env: dict, log_path: str):
         self.log = open(log_path, "wb")
         self.launch_ts = time.time()
+        self.launch_ticks = cpu_ticks()
         self.proc = subprocess.Popen(argv, env=env, stdout=self.log,
                                      stderr=subprocess.STDOUT,
                                      stdin=subprocess.DEVNULL,

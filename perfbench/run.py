@@ -1,14 +1,14 @@
 """Repository benchmark: parse → enrich → route → aggregate on local Spark.
 
-    python3 perfbench/run.py --workload cold_month --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload reaggregate --seed 1 --seconds 5 --trace 0
     python3 perfbench/run.py --smoke            # tiny corpus, every workload
     python3 perfbench/run.py --write-manifest   # regenerate BENCHMARK.json
 
 Run from the repository root.  Each run generates (or reuses) the corpus
-for its seed, takes extra setup_s samples from short-lived processes,
-then runs the workload in a child process in its own session and prints
-every metric with its unit.  The last line of stdout is one JSON object:
-``{"correct", "attempted", "failed", "metrics"}``.  See README.md.
+for its seed, then runs the workload in a child process in its own
+session and prints every metric with its unit.  The last line of stdout
+is one JSON object: ``{"correct", "attempted", "failed", "metrics"}``.
+See README.md.
 """
 
 from __future__ import annotations
@@ -28,11 +28,9 @@ sys.path.insert(0, ROOT)
 
 from perfbench import procs, spec  # noqa: E402
 
-SETUP_SAMPLES = 2     # setup_s is the median of this many set-ups
 RUN_BUDGET_S = 170    # BENCHMARK.json workloads: every child is killed
                       # by then, so a run ends within 180 s
-MANUAL_BUDGET_S = 900  # cold_month / reaggregate, run by hand
-PROBE_TIMEOUT_S = 40
+MANUAL_BUDGET_S = 900  # cold_month / anon_release, run by hand
 
 
 class Interrupted(Exception):
@@ -118,23 +116,18 @@ def run_workload(a, workload: str, seed: int, seconds: float,
               "--workload", workload, "--corpus-info", info_path,
               "--run-dir", run_dir, "--cores", str(a.cores)]
     try:
-        setups = []
-        t0 = time.monotonic()
-        for i in range(0 if trace else SETUP_SAMPLES - 1):
-            r, child = run_child(worker + ["--probe"],
-                                 child_env(a, run_dir, False), run_dir,
-                                 PROBE_TIMEOUT_S, f"probe{i}")
-            setups.append(r["ready_ts"] - child.launch_ts)
-        timeline["probes_s"] = time.monotonic() - t0
         t0 = time.monotonic()
         r, child = run_child(
             worker + ["--seconds", str(seconds), "--trace", str(int(trace))],
             child_env(a, run_dir, trace), run_dir,
             deadline - time.monotonic(), "run")
         timeline["workload_s"] = time.monotonic() - t0
-        setups.append(r["ready_ts"] - child.launch_ts)
         timeline.update(r.pop("timeline"))
-        r.update(setups=setups, peak_rss_mb=child.peak_rss_mb,
+        wall = r["ready_ts"] - child.launch_ts
+        stolen = procs.stolen_share(child.launch_ticks, r["ready_ticks"])
+        r.update(setup_wall_s=wall, setup_stolen=stolen,
+                 setup_s=wall * (1.0 - stolen),
+                 peak_rss_mb=child.peak_rss_mb,
                  corpus=corpus, timeline=timeline)
         if trace:
             traces_dir = os.path.join(work, "traces")
@@ -151,7 +144,7 @@ def metrics_of(r: dict, trace: bool) -> dict:
     job_s = statistics.median(r["samples"])
     if not trace:
         vals = {
-            "setup_s": statistics.median(r["setups"]),
+            "setup_s": r["setup_s"],
             "job_s": job_s,
             "turns_per_s": r["corpus"]["n_turns"] / job_s,
             "peak_rss_mb": r["peak_rss_mb"],
@@ -160,7 +153,8 @@ def metrics_of(r: dict, trace: bool) -> dict:
                 for n in spec.END_TO_END}
     layers = dict(r["layers"])
     layers["session.jvm_start_s"] = r["jvm_start_s"]
-    layers["trace.overhead_s"] = statistics.median(r["traced"]) - job_s
+    layers["trace.overhead_s"] = (statistics.median(r["traced"])
+                                  - statistics.median(r["walls"]))
     layers["failed_ratio"] = r["failed"] / r["attempted"]
     return {n: {"value": float(layers.get(n, 0.0)),
                 "unit": spec.PER_LAYER[n][0]}
@@ -179,10 +173,11 @@ def report(workload: str, seed: int, trace: bool, r: dict) -> dict:
           f"(failed_ratio {r['failed'] / r['attempted']:.3f})")
     print("# wall: " + ", ".join(f"{k} {v:.1f}"
                                  for k, v in r["timeline"].items()))
-    if r.get("phases"):
-        for k in ("parse_seconds", "cache_seconds", "sink_seconds"):
-            print(f"# run_pipeline {k}: median "
-                  f"{statistics.median(p[k] for p in r['phases']):.2f} s")
+    print(f"# setup: wall_s {r['setup_wall_s']:.3f}, "
+          f"stolen {r['setup_stolen']:.3f}")
+    for i, j in enumerate(r.get("jobs") or []):
+        print(f"# job {i}: " + ", ".join(
+            f"{k} {v:.3f}" for k, v in j.items()))
     for name, v in m.items():
         print(f"{name} {v['value']:.6g} {v['unit']}")
     return {"correct": r["failed"] == 0, "attempted": r["attempted"],

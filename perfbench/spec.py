@@ -21,39 +21,38 @@ COMMAND = ["python3", "perfbench/run.py",
 
 PATHS = ["perfbench"]
 
-RUN_SECONDS = 10
+RUN_SECONDS = 5
 
 # conversations in the generated corpus (same size for every workload,
 # so one seed's corpus is generated once and shared)
-CORPUS_CONVS = 600
+CORPUS_CONVS = 400
 SMOKE_CONVS = 40
 
 # every workload the benchmark can run; ``name -> why``
 WORKLOADS = {
-    "parse_checkpoint": "scan raw transcripts, run the parse FSM "
-                        "(mapInPandas) and write the battles checkpoint: "
-                        "cold_month's first phase, the per-conversation "
-                        "Python stage",
+    "reaggregate": "run_pipeline resume=True, materialize=stage over a "
+                   "battles checkpoint, usage and battle_counts reports: "
+                   "parse idle, enrich and aggregate do the work",
+    "ingest": "the month's two raw-transcript jobs: run_pipeline's parse "
+              "FSM and battles checkpoint, then the anonymized release "
+              "(per-line rewrite, write, leak check)",
     "cold_month": "run_pipeline from raw transcripts to the battles "
                   "checkpoint, 11 routed sinks and rejects (cache "
-                  "materialization): the monthly stats job, the only "
-                  "one that parses",
-    "reaggregate": "run_pipeline resume=True, materialize=stage over a "
-                   "battles checkpoint: re-running the reports; parse "
-                   "idle, enrich and aggregate do all the work",
+                  "materialization): the whole monthly stats job",
     "anon_release": "sample public conversations, anonymize, write and "
                     "leak-verify the release: per-line Python rewrite "
                     "plus a transcript-sized write, no aggregate",
 }
 
-# the workloads BENCHMARK.json lists: the two Python-boundary stages.
-# cold_month and reaggregate run by hand; see README.md for why they do
-# not fit the benchmark's time budget or bounds
-MANIFEST_WORKLOADS = ["parse_checkpoint", "anon_release"]
+# the workloads BENCHMARK.json lists; between them they run every layer.
+# cold_month and anon_release run by hand; see README.md for why
+MANIFEST_WORKLOADS = ["reaggregate", "ingest"]
 
-# end-to-end metrics: name -> (unit, better, bound).  Every bound is the
-# largest allowed: on the 4-vCPU shared host the benchmark was tuned
-# on, identical CPU work varies by 20-50% from minute to minute
+# end-to-end metrics: name -> (unit, better, bound).  setup_s and job_s
+# are wall times with the hypervisor's stolen CPU share taken out (see
+# README.md).  Every bound is the largest allowed: on a shared 4-vCPU
+# virtual machine the hypervisor took 4-45% of the vCPUs' time from one
+# minute to the next
 END_TO_END = {
     "setup_s": ("s", "lower", 0.25),
     "job_s": ("s", "lower", 0.25),
@@ -65,19 +64,20 @@ END_TO_END = {
 PER_LAYER = {
     "session.jvm_start_s": ("s", "lower", "setup_s on all workloads"),
     "session.gc_s": ("s", "lower", "job_s, peak_rss_mb on all workloads"),
-    "sources.scan_s": ("s", "lower", "job_s on parse_checkpoint, cold_month, anon_release"),
-    "sources.read_mb": ("MB", "lower", "job_s on parse_checkpoint, cold_month, anon_release"),
+    "sources.scan_s": ("s", "lower", "job_s on ingest, cold_month"),
+    "sources.read_mb": ("MB", "lower", "job_s on ingest, cold_month"),
     "sources.write_s": ("s", "lower",
-                        "job_s on anon_release; reaggregate via staging"),
-    "sources.write_mb": ("MB", "lower", "job_s on anon_release"),
-    "sources.files_written": ("count", "lower", "job_s on anon_release"),
-    "sources.lineage_commits": ("count", "lower", "job_s on cold_month"),
-    "parse.s": ("s", "lower", "turns_per_s on parse_checkpoint, cold_month"),
-    "parse.task_s": ("s", "lower", "turns_per_s on parse_checkpoint, cold_month"),
-    "parse.shuffle_mb": ("MB", "lower", "turns_per_s on parse_checkpoint, cold_month"),
-    "parse.task_skew": ("ratio", "lower", "turns_per_s on parse_checkpoint, cold_month"),
-    "parse.battles": ("count", "higher", "output check on parse_checkpoint, cold_month"),
-    "parse.rejects": ("count", "lower", "output check on parse_checkpoint, cold_month"),
+                        "job_s on ingest (release); reaggregate via staging"),
+    "sources.write_mb": ("MB", "lower", "job_s on ingest"),
+    "sources.files_written": ("count", "lower", "job_s on ingest"),
+    "sources.lineage_commits": ("count", "lower",
+                                "job_s on reaggregate, cold_month"),
+    "parse.s": ("s", "lower", "turns_per_s on ingest, cold_month"),
+    "parse.task_s": ("s", "lower", "turns_per_s on ingest, cold_month"),
+    "parse.shuffle_mb": ("MB", "lower", "turns_per_s on ingest, cold_month"),
+    "parse.task_skew": ("ratio", "lower", "turns_per_s on ingest, cold_month"),
+    "parse.battles": ("count", "higher", "output check on ingest, cold_month"),
+    "parse.rejects": ("count", "lower", "output check on ingest, cold_month"),
     "enrich.s": ("s", "lower", "job_s on reaggregate, cold_month"),
     "enrich.task_s": ("s", "lower", "job_s on reaggregate, cold_month"),
     "enrich.mon_rows": ("count", "higher", "work done by enrich"),
@@ -89,16 +89,16 @@ PER_LAYER = {
     "aggregate.task_skew": ("ratio", "lower",
                             "job_s on reaggregate, cold_month"),
     "aggregate.rows_out": ("count", "higher", "work done by aggregate"),
-    "pipeline.checkpoint_s": ("s", "lower",
-                              "job_s on parse_checkpoint, cold_month"),
+    "pipeline.checkpoint_s": ("s", "lower", "job_s on ingest, cold_month"),
     "pipeline.materialize_s": ("s", "lower",
                                "job_s on cold_month, reaggregate"),
     "pipeline.sink_pool_s": ("s", "lower",
                              "job_s on cold_month, reaggregate"),
     "pipeline.core_busy": ("ratio", "higher",
                            "job_s on cold_month, reaggregate"),
-    "anonymize.s": ("s", "lower", "job_s on anon_release only"),
-    "anonymize.verify_s": ("s", "lower", "job_s on anon_release only"),
+    "anonymize.s": ("s", "lower", "job_s on ingest, anon_release only"),
+    "anonymize.verify_s": ("s", "lower",
+                           "job_s on ingest, anon_release only"),
     "anonymize.lines_in": ("count", "higher", "work done by anonymize"),
     "anonymize.lines_out": ("count", "higher", "work done by anonymize"),
     "anonymize.leaks": ("count", "lower", "must be 0"),

@@ -24,7 +24,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
-from perfbench import spec, tracing  # noqa: E402
+from perfbench import procs, spec, tracing  # noqa: E402
 
 NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
 UNIT = re.compile(r"^[A-Za-z0-9_/%.-]{1,16}$")
@@ -111,38 +111,67 @@ def test_without_the_program_exits_nonzero(tmp_path):
     shutil.copytree(HERE, tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    r = bench(str(tmp_path / ".perfbench_work"), "--workload", "cold_month",
+    r = bench(str(tmp_path / ".perfbench_work"), "--workload",
+              spec.MANIFEST_WORKLOADS[0],
               "--seed", "1", "--seconds", "1", "--trace", "0",
               env=env, cwd=str(tmp_path), timeout=180)
     assert r.returncode != 0
     assert not r.stdout.strip().endswith("}")
 
 
-def test_failing_run_leaves_nothing_running(tmp_path):
+def watch(p: subprocess.Popen, work_dir: str, until=None,
+          timeout_s: float = 170) -> set[str]:
+    """Poll the run's processes until it exits (or ``until(seen)``
+    holds); returns every command line seen."""
+    seen: set[str] = set()
+    deadline = time.monotonic() + timeout_s
+    while p.poll() is None and time.monotonic() < deadline:
+        seen.update(s.split(": ", 1)[1] for s in survivors(work_dir))
+        if until is not None and until(seen):
+            break
+        time.sleep(0.2)
+    return seen
+
+
+def python_workers(seen: set[str]) -> bool:
+    return any("pyspark.daemon" in s for s in seen)
+
+
+def test_run_that_raises_mid_job_leaves_nothing_running(tmp_path):
+    # the hook raises between ingest's checkpoint job (whose parse stage
+    # started pyspark.daemon and its Python workers) and its release job
     work = str(tmp_path / "work")
-    env = dict(os.environ, PERFBENCH_FAIL_AFTER_SETUP="1")
-    r = bench(work, "--workload", "anon_release", "--seed", "1",
-              "--seconds", "1", "--convs", str(spec.SMOKE_CONVS),
-              env=env, timeout=180)
-    assert r.returncode != 0
-    assert "PERFBENCH_FAIL_AFTER_SETUP" in r.stderr
-    assert not r.stdout.strip().endswith("}")
+    cmd = [sys.executable, os.path.join(HERE, "run.py"), "--work-dir", work,
+           "--workload", "ingest", "--seed", "1", "--seconds", "1",
+           "--convs", str(spec.SMOKE_CONVS)]
+    p = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE,
+                         stderr=subprocess.PIPE, text=True,
+                         env=dict(os.environ, PERFBENCH_FAIL_MID_JOB="1"))
+    try:
+        seen = watch(p, work)
+        out, err = p.communicate(timeout=60)
+    finally:
+        if p.poll() is None:
+            p.kill()
+            p.wait()
+    assert python_workers(seen), seen
+    assert p.returncode != 0
+    assert "PERFBENCH_FAIL_MID_JOB" in err
+    assert not out.strip().endswith("}")
     assert_clean(work)
 
 
 def test_interrupted_run_leaves_nothing_running(tmp_path):
     work = str(tmp_path / "work")
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--work-dir", work,
-           "--workload", "cold_month", "--seed", "1", "--seconds", "1",
+           "--workload", "ingest", "--seed", "1", "--seconds", "1",
            "--convs", str(spec.SMOKE_CONVS)]
     p = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE,
                          stderr=subprocess.PIPE, text=True)
     try:
-        deadline = time.monotonic() + 120
-        # interrupt once the JVM is up
-        while not any(b"java" in s.encode() for s in survivors(work)):
-            assert time.monotonic() < deadline and p.poll() is None
-            time.sleep(0.5)
+        # interrupt mid-job, once the JVM has started Python workers
+        seen = watch(p, work, until=python_workers)
+        assert python_workers(seen) and p.poll() is None, seen
         p.send_signal(signal.SIGINT)
         out, _err = p.communicate(timeout=60)
     finally:
@@ -152,6 +181,49 @@ def test_interrupted_run_leaves_nothing_running(tmp_path):
     assert p.returncode != 0
     assert not out.strip().endswith("}")
     assert_clean(work)
+
+
+def test_prepared_checkpoint_matches_program_parse(tmp_path):
+    # the corpus's checkpoint (reaggregate's input) is written from
+    # parse_battle per conversation; it must hold what run_pipeline's
+    # parse stage writes
+    script = """
+import sys
+from perfbench import checks, loadgen
+from stats_spark import session
+from stats_spark.operators import parse
+from stats_spark.sources import tables
+work = sys.argv[1]
+corpus = loadgen.ensure_corpus(work, 3, %d)
+spark = session.get_spark("perfbench-test", cores=2, shuffle_partitions=2)
+try:
+    battles = parse.parse_battles(tables.load_transcripts(spark, corpus),
+                                  tables.load_conversations(spark, corpus))
+    battles.write.partitionBy("format").parquet(work + "/parsed")
+    a = spark.read.parquet(corpus["battles"])
+    b = spark.read.parquet(work + "/parsed")
+    assert a.schema == b.schema, (a.schema, b.schema)
+    assert checks.sink_digest(corpus["battles"]) == checks.sink_digest(
+        work + "/parsed")
+finally:
+    spark.stop()
+print("same")
+""" % spec.SMOKE_CONVS
+    work = str(tmp_path / "work")
+    env = dict(os.environ, PYTHONPATH=ROOT, STATS_SPARK_DRIVER_MEM="1g",
+               STATS_SPARK_LOCAL_DIR=os.path.join(work, "spark-local"),
+               TMPDIR=str(tmp_path))
+    p = subprocess.Popen([sys.executable, "-c", script, work], cwd=ROOT,
+                         env=env, stdout=subprocess.PIPE,
+                         stderr=subprocess.STDOUT, text=True,
+                         start_new_session=True)
+    try:
+        out, _ = p.communicate(timeout=300)
+    finally:
+        procs.kill_session(p.pid, grace_s=5.0)
+        if p.poll() is None:
+            p.wait()
+    assert p.returncode == 0 and out.strip().endswith("same"), out[-3000:]
 
 
 def test_smoke_every_workload_prints_every_metric(tmp_path):
@@ -174,9 +246,28 @@ def test_smoke_every_workload_prints_every_metric(tmp_path):
             head = dict(kv.split("=") for kv in line[2:].split())
         elif line.startswith("{"):
             by[(head["workload"], head["trace"])] = json.loads(line)
-    layers = {w: by[(w, "1")]["metrics"] for w in spec.WORKLOADS}
-    assert layers["reaggregate"]["parse.s"]["value"] == 0
-    assert layers["anon_release"]["aggregate.s"]["value"] == 0
-    assert layers["cold_month"]["parse.s"]["value"] > 0
-    assert all(layers[w]["anonymize.leaks"]["value"] == 0 for w in layers)
+    layers = {w: {k: v["value"] for k, v in by[(w, "1")]["metrics"].items()}
+              for w in spec.WORKLOADS}
+    assert layers["reaggregate"]["parse.s"] == 0
+    assert layers["anon_release"]["aggregate.s"] == 0
+    assert layers["ingest"]["aggregate.s"] == 0
+    for w in ("cold_month", "ingest"):
+        assert layers[w]["parse.s"] > 0 and layers[w]["parse.battles"] > 0
+    for w in ("cold_month", "reaggregate"):
+        assert layers[w]["enrich.s"] > 0 and layers[w]["aggregate.s"] > 0
+        assert layers[w]["enrich.mon_rows"] > 0
+        assert layers[w]["pipeline.materialize_s"] > 0
+        assert layers[w]["pipeline.sink_pool_s"] > 0
+    for w in ("ingest", "anon_release"):
+        assert layers[w]["anonymize.s"] > 0
+        assert layers[w]["anonymize.lines_out"] > 0
+    assert all(layers[w]["anonymize.leaks"] == 0 for w in layers)
+    # every layer the benchmark names runs on a workload BENCHMARK.json
+    # lists
+    listed = [layers[w] for w in spec.MANIFEST_WORKLOADS]
+    for name in ("parse.s", "enrich.s", "aggregate.s", "anonymize.s",
+                 "pipeline.checkpoint_s", "pipeline.materialize_s",
+                 "pipeline.sink_pool_s", "sources.scan_s",
+                 "sources.write_s"):
+        assert any(m[name] > 0 for m in listed), name
     assert_clean(work)

@@ -17,7 +17,11 @@ import time
 import traceback
 
 SALT = "perfbench-salt"
-WARMUP_S = 6  # untimed warm-up: at least one job, and at least this long
+
+# the reports reaggregate writes: usage (the mons aggregation family) and
+# battle_counts (the battles_w family, written while staging runs), the
+# two DuckDB recomputes; rejects is always written
+REAGG_SINKS = ["usage", "battle_counts"]
 
 
 def jvm_gc_s(spark) -> float:
@@ -52,12 +56,14 @@ class Workload:
     first good job's output, ``traced`` for the traced run's sequential
     drive."""
 
-    warmup = True  # run untimed jobs before timing (see WARMUP_S)
+    # untimed jobs before the timed ones, so JIT and codegen caches are
+    # warm, as they are over a production-sized job
+    warmup_jobs = 1
 
-    def __init__(self, spark, corpus: dict, run_dir: str):
+    def __init__(self, spark, corpus: dict, out: str):
         self.spark = spark
         self.corpus = corpus
-        self.out = os.path.join(run_dir, "out")
+        self.out = out
 
     def prepare(self) -> None:
         pass
@@ -96,28 +102,46 @@ def _write_sink(spark, tables, frames, out, sink, tracer, trace):
 
 def write_checkpoint(spark, battles, path: str) -> None:
     """The battles checkpoint as run_pipeline writes it: 2x parallelism
-    output tasks, partitioned on the routing key."""
+    output tasks, partitioned on the routing key (traced drive only)."""
     n_out = max(8, spark.sparkContext.defaultParallelism * 2)
     (battles.repartition(n_out, "format", "conv_id")
      .write.mode("overwrite").partitionBy("format").parquet(path))
 
 
-class ParseCheckpoint(Workload):
-    """Raw transcripts → parse FSM → battles checkpoint: the first phase
-    of run_pipeline, where the per-conversation Python stage works."""
+class Checkpoint(Workload):
+    """Raw transcripts → parse FSM → battles checkpoint, through
+    ``run_pipeline`` itself: its ledger already records every sink as
+    committed, so a ``resume=True`` run with the checkpoint gone re-parses
+    and writes the checkpoint, and skips every sink."""
 
     @property
     def bpath(self) -> str:
         return os.path.join(self.out, "battles")
 
-    def job(self) -> dict:
-        from stats_spark.operators import parse
+    def prepare(self) -> None:
+        from stats_spark.plans import pipeline
         from stats_spark.sources import tables
 
-        tr = tables.load_transcripts(self.spark, self.corpus)
-        cv = tables.load_conversations(self.spark, self.corpus)
-        write_checkpoint(self.spark, parse.parse_battles(tr, cv), self.bpath)
-        return {}
+        shutil.rmtree(self.out, ignore_errors=True)
+        committed = []
+        for sink in pipeline.SINKS + ["rejects"]:
+            path = os.path.join(self.out, sink)
+            os.makedirs(path)
+            open(os.path.join(path, "_SUCCESS"), "w").close()
+            committed.append(dict(partition=sink, path=path, rows=0,
+                                  seconds=0.0, skipped=False))
+        tables.write_lineage(self.spark, self.out, "stats_pipeline",
+                             committed)
+
+    def clear(self) -> None:
+        self.spark.catalog.clearCache()
+        shutil.rmtree(self.bpath, ignore_errors=True)
+
+    def job(self) -> dict:
+        from stats_spark.plans import pipeline
+
+        return pipeline.run_pipeline(self.spark, self.corpus, self.out,
+                                     resume=True)
 
     def _conv_count(self, parsed: int, rejects: int) -> list[str]:
         if parsed + rejects != self.corpus["n_convs"]:
@@ -128,7 +152,10 @@ class ParseCheckpoint(Workload):
     def check(self, r: dict) -> list[str]:
         from perfbench import checks
 
-        return self._conv_count(*checks.checkpoint_split(self.bpath))
+        bad = self._conv_count(*checks.checkpoint_split(self.bpath))
+        if not all(m["skipped"] for m in r["sinks"]):
+            bad.append("a committed sink was recomputed")
+        return bad
 
     def check_traced(self, c: dict) -> list[str]:
         return self._conv_count(c["parse.battles"], c["parse.rejects"])
@@ -159,11 +186,13 @@ class ParseCheckpoint(Workload):
         return c
 
 
-class ColdMonth(ParseCheckpoint):
-    # no warm-up: the monthly job runs once per JVM (spark-submit), so
-    # its JIT and codegen warm-up is part of what users wait for — and a
-    # warm-up job would double the run's length (see README.md)
-    warmup = False
+class ColdMonth(Workload):
+    """The whole monthly job: run_pipeline from raw transcripts through
+    the checkpoint and all 11 sinks plus rejects (by hand only)."""
+
+    @property
+    def bpath(self) -> str:
+        return os.path.join(self.out, "battles")
 
     def job(self) -> dict:
         from stats_spark.plans import pipeline
@@ -180,7 +209,11 @@ class ColdMonth(ParseCheckpoint):
         if missing:
             return [f"sinks not written: {sorted(missing)}"]
         parsed, _ = checks.checkpoint_split(self.bpath)
-        return self._conv_count(parsed, rows["rejects"])
+        return Checkpoint._conv_count(self, parsed, rows["rejects"])
+
+    def check_traced(self, c: dict) -> list[str]:
+        return Checkpoint._conv_count(self, c["parse.battles"],
+                                      c["parse.rejects"])
 
     def cross_check(self) -> list[str]:
         from perfbench import checks
@@ -190,7 +223,7 @@ class ColdMonth(ParseCheckpoint):
     def traced(self, tracer, trace: int) -> dict:
         from stats_spark.plans import pipeline
 
-        c = super().traced(tracer, trace)
+        c = Checkpoint.traced(self, tracer, trace)
         with tracer.span("pipeline.materialize", trace):
             with tracer.span("enrich", trace):
                 frames = pipeline.build_frames(
@@ -200,46 +233,40 @@ class ColdMonth(ParseCheckpoint):
                 c["enrich.mon_rows"] = mons.count()
                 for df in rest:
                     df.count()
-        c.update(self._sinks(frames, tracer, trace))
+        c.update(_sinks(self, frames, pipeline.SINKS, tracer, trace))
         return c
 
-    def _sinks(self, frames, tracer, trace) -> dict:
-        from stats_spark.plans import pipeline
-        from stats_spark.sources import tables
 
-        rows = 0
-        with tracer.span("pipeline.sink_pool", trace):
-            for sink in pipeline.SINKS + ["rejects"]:
-                rows += _write_sink(self.spark, tables, frames, self.out,
-                                    sink, tracer, trace)
-        return {"aggregate.rows_out": rows}
+def _sinks(w: Workload, frames, sinks, tracer, trace) -> dict:
+    from stats_spark.sources import tables
+
+    rows = 0
+    with tracer.span("pipeline.sink_pool", trace):
+        for sink in sinks + ["rejects"]:
+            rows += _write_sink(w.spark, tables, frames, w.out, sink,
+                                tracer, trace)
+    return {"aggregate.rows_out": rows}
 
 
-class Reaggregate(ColdMonth):
-    """Reports re-run from an existing battles checkpoint, through the
-    staged (parquet) materialization."""
+class Reaggregate(Workload):
+    """Reports re-run from an existing battles checkpoint through the
+    staged (parquet) materialization: ``run_pipeline(resume=True,
+    materialize="stage")`` for the ``REAGG_SINKS`` reports.  The
+    checkpoint comes with the corpus: the library's own per-conversation
+    parser's rows (``loadgen.write_battles_checkpoint``)."""
 
-    warmup = True
+    # one JVM's consecutive jobs took 14.3, 11.9 and 11.6 s: after one
+    # warm-up the JIT is still catching up, and how far it got varies
+    warmup_jobs = 2
 
-    def cross_check(self) -> list[str]:
-        return []  # its outputs are compared with cold_month's instead
-
-    def check_traced(self, c: dict) -> list[str]:
-        return self.check({"parse_seconds": 0.0})
+    def __init__(self, spark, corpus: dict, out: str):
+        super().__init__(spark, corpus, out)
+        self.reference = None
 
     def prepare(self) -> None:
-        # the checkpoint and the reference outputs come from one
-        # cold_month job on the same seed; its sinks are digested here
-        from perfbench import checks
-        from stats_spark.plans import pipeline
-
-        super().clear()
-        r = ColdMonth.job(self)
-        bad = ColdMonth.check(self, r)
-        if bad:
-            raise RuntimeError(f"reference cold_month job failed: {bad}")
-        self.reference = {s: checks.sink_digest(os.path.join(self.out, s))
-                          for s in pipeline.SINKS + ["rejects"]}
+        shutil.rmtree(self.out, ignore_errors=True)
+        shutil.copytree(self.corpus["battles"],
+                        os.path.join(self.out, "battles"))
 
     def clear(self) -> None:
         self.spark.catalog.clearCache()
@@ -251,19 +278,44 @@ class Reaggregate(ColdMonth):
         from stats_spark.plans import pipeline
 
         return pipeline.run_pipeline(self.spark, self.corpus, self.out,
-                                     resume=True, materialize="stage")
+                                     resume=True, materialize="stage",
+                                     sinks=REAGG_SINKS)
 
-    def check(self, r: dict) -> list[str]:
+    def _digests(self) -> dict:
         from perfbench import checks
 
-        bad = []
+        return {s: checks.sink_digest(os.path.join(self.out, s))
+                for s in REAGG_SINKS + ["rejects"]}
+
+    def _check_outputs(self) -> list[str]:
+        # the first job's outputs are checked against DuckDB and become
+        # the reference; every later job must reproduce them
+        got = self._digests()
+        if self.reference is None:
+            bad = self.cross_check()
+            if not bad:
+                self.reference = got
+            return bad
+        return [f"{s}: rows/digest {got[s]} != first job's "
+                f"{self.reference[s]}"
+                for s in got if got[s] != self.reference[s]]
+
+    def check(self, r: dict) -> list[str]:
+        bad = self._check_outputs()
         if r["parse_seconds"] != 0.0:
             bad.append("the battles checkpoint was not reused")
-        for sink, want in self.reference.items():
-            got = checks.sink_digest(os.path.join(self.out, sink))
-            if got != want:
-                bad.append(f"{sink}: rows/digest {got} != cold_month {want}")
+        if {m["partition"] for m in r["sinks"]} != set(REAGG_SINKS
+                                                       + ["rejects"]):
+            bad.append(f"sinks written: {r['sinks']}")
         return bad
+
+    def check_traced(self, c: dict) -> list[str]:
+        return self._check_outputs()
+
+    def cross_check(self) -> list[str]:
+        from perfbench import checks
+
+        return checks.duckdb_cross_check(self.out)
 
     def traced(self, tracer, trace: int) -> dict:
         from stats_spark.plans import pipeline
@@ -279,7 +331,7 @@ class Reaggregate(ColdMonth):
                     spark, checkpoint, stage_dir=os.path.join(out, "_stage"))
                 c["enrich.mon_rows"] = spark.read.parquet(
                     os.path.join(out, "_stage", "mons")).count()
-        c.update(self._sinks(frames, tracer, trace))
+        c.update(_sinks(self, frames, REAGG_SINKS, tracer, trace))
         return c
 
 
@@ -346,26 +398,72 @@ class AnonRelease(Workload):
         return c
 
 
+class Ingest(Workload):
+    """The month's two jobs over the raw transcripts, one after the
+    other: the battles checkpoint (``Checkpoint``) and the anonymized
+    release (``AnonRelease``)."""
+
+    def __init__(self, spark, corpus: dict, out: str):
+        super().__init__(spark, corpus, out)
+        self.parts = [Checkpoint(spark, corpus, os.path.join(out, "stats")),
+                      AnonRelease(spark, corpus, os.path.join(out, "anon"))]
+
+    def prepare(self) -> None:
+        for p in self.parts:
+            p.prepare()
+
+    def clear(self) -> None:
+        for p in self.parts:
+            p.clear()
+
+    def job(self) -> dict:
+        checkpoint = self.parts[0].job()
+        if os.environ.get("PERFBENCH_FAIL_MID_JOB"):
+            # test hook: a run that raises inside a job, with the parse
+            # stage's Python workers up
+            raise RuntimeError("PERFBENCH_FAIL_MID_JOB")
+        return dict(checkpoint=checkpoint, release=self.parts[1].job())
+
+    def check(self, r: dict) -> list[str]:
+        return (self.parts[0].check(r["checkpoint"])
+                + self.parts[1].check(r["release"]))
+
+    def check_traced(self, c: dict) -> list[str]:
+        return self.parts[0].check_traced(c) + self.parts[1].check_traced(c)
+
+    def cross_check(self) -> list[str]:
+        return self.parts[0].cross_check()
+
+    def traced(self, tracer, trace: int) -> dict:
+        return {**self.parts[0].traced(tracer, trace),
+                **self.parts[1].traced(tracer, trace)}
+
+
 WORKLOADS = {"cold_month": ColdMonth, "reaggregate": Reaggregate,
-             "anon_release": AnonRelease, "parse_checkpoint": ParseCheckpoint}
+             "ingest": Ingest, "anon_release": AnonRelease}
 
 
 def run_job(w: Workload, stats: dict, tracer=None) -> float | None:
     """One checked job — the traced drive when ``tracer`` is given;
-    returns its wall time, or None when it failed."""
+    returns its wall time, or None when it failed.  An untraced job's
+    wall time and stolen CPU share go to ``stats["jobs"]``."""
+    from perfbench import checks, procs
+
     w.clear()
     stats["attempted"] += 1
     trace = len(stats["traces"])
+    before = checks.dir_usage(w.out)
+    gc0, ticks0 = jvm_gc_s(w.spark), procs.cpu_ticks()
     t0 = time.perf_counter()
     try:
         if tracer is None:
             r = w.job()
         else:
-            gc0 = jvm_gc_s(w.spark)
             with tracer.span("job", trace) as root:
                 r = w.traced(tracer, trace)
             r["session.gc_s"] = jvm_gc_s(w.spark) - gc0
         dt = time.perf_counter() - t0
+        ticks1, gc1 = procs.cpu_ticks(), jvm_gc_s(w.spark)
         bad = w.check(r) if tracer is None else w.check_traced(r)
         if not bad and not stats["cross_checked"]:
             bad = w.cross_check()
@@ -378,22 +476,22 @@ def run_job(w: Workload, stats: dict, tracer=None) -> float | None:
         print("job failed:", "; ".join(bad), file=sys.stderr, flush=True)
         return None
     if tracer is not None:
-        from perfbench import checks
-
-        mb, files = checks.dir_usage(w.out)
-        lineage = os.path.join(w.out, "_lineage")
+        # what the job added under its output dir (inputs kept there,
+        # such as reaggregate's checkpoint, are not counted)
+        after = checks.dir_usage(w.out)
         r.update({
-            "sources.write_mb": mb,
-            "sources.files_written": files,
-            "sources.lineage_commits": (
-                sum(n.startswith("commit-") for n in os.listdir(lineage))
-                if os.path.isdir(lineage) else 0),
+            "sources.write_mb": after[0] - before[0],
+            "sources.files_written": after[1] - before[1],
+            "sources.lineage_commits": after[2] - before[2],
         })
         stats["traces"].append(dict(trace=trace, root=root["id"],
                                     job_s=dt, counts=r))
-    elif "parse_seconds" in r:
-        stats["phases"].append({k: r[k] for k in (
-            "parse_seconds", "cache_seconds", "sink_seconds")})
+    else:
+        stats["jobs"].append(dict(
+            wall_s=dt, gc_s=gc1 - gc0,
+            stolen=procs.stolen_share(ticks0, ticks1),
+            **{k: r[k] for k in ("parse_seconds", "cache_seconds",
+                                 "sink_seconds") if k in r}))
     return dt
 
 
@@ -447,23 +545,16 @@ def traced_metrics(tracer, evlog_dir: str, traces: list[dict],
 def run(spark, a) -> dict:
     with open(a.corpus_info) as f:
         corpus = json.load(f)
-    w = WORKLOADS[a.workload](spark, corpus, a.run_dir)
+    w = WORKLOADS[a.workload](spark, corpus, os.path.join(a.run_dir, "out"))
     t0 = time.monotonic()
     w.prepare()
-    stats = dict(attempted=0, failed=0, phases=[], traces=[],
+    stats = dict(attempted=0, failed=0, jobs=[], traces=[],
                  cross_checked=False)
-    if w.warmup or a.trace:
-        # untimed warm-up: JIT and codegen caches fill, as they would
-        # over a production-sized job.  A traced run always warms up, so
-        # its traced and untraced jobs start from the same JVM state
-        warm_until = time.monotonic() + WARMUP_S
-        while True:
-            w.clear()
-            bad = w.check(w.job())
-            if bad:
-                raise RuntimeError(f"warm-up job failed its check: {bad}")
-            if time.monotonic() >= warm_until:
-                break
+    for _ in range(w.warmup_jobs):
+        w.clear()
+        bad = w.check(w.job())
+        if bad:
+            raise RuntimeError(f"warm-up job failed its check: {bad}")
     timeline = {"prepare_s": time.monotonic() - t0}
     t0 = time.monotonic()
 
@@ -477,7 +568,8 @@ def run(spark, a) -> dict:
     while not samples or time.monotonic() < deadline:
         dt = run_job(w, stats)
         if dt is not None:
-            samples.append(dt)
+            # the job's time on vCPUs the hypervisor did not take away
+            samples.append(dt * (1.0 - stats["jobs"][-1]["stolen"]))
         if tracer is not None:
             # each untraced job is paired with a traced drive; the
             # difference of their medians is the tracing overhead
@@ -489,9 +581,10 @@ def run(spark, a) -> dict:
     w.clear()
     timeline["timed_s"] = time.monotonic() - t0
     return dict(timeline=timeline, samples=samples,
+                walls=[j["wall_s"] for j in stats["jobs"]],
                 traced=traced if tracer is not None else None,
                 attempted=stats["attempted"], failed=stats["failed"],
-                phases=stats["phases"], traces=stats["traces"],
+                jobs=stats["jobs"], traces=stats["traces"],
                 tracer=tracer)
 
 
@@ -503,10 +596,9 @@ def main(argv=None) -> int:
     p.add_argument("--seconds", type=float, default=10)
     p.add_argument("--trace", type=int, default=0)
     p.add_argument("--cores", type=int, required=True)
-    p.add_argument("--probe", action="store_true",
-                   help="only set up and stop (a setup_s sample)")
     a = p.parse_args(argv)
 
+    from perfbench import procs
     from stats_spark import session
     from stats_spark.operators import parse
 
@@ -517,14 +609,11 @@ def main(argv=None) -> int:
         extra_conf={"spark.ui.showConsoleProgress": "false"})
     jvm_start_s = time.perf_counter() - t0
     parse.make_dims_payload()
-    result = dict(ready_ts=time.time(), jvm_start_s=jvm_start_s,
+    result = dict(ready_ts=time.time(), ready_ticks=procs.cpu_ticks(),
+                  jvm_start_s=jvm_start_s,
                   timeline={})
     try:
-        if not a.probe:
-            if os.environ.get("PERFBENCH_FAIL_AFTER_SETUP"):
-                # test hook: a run that raises with Spark up
-                raise RuntimeError("PERFBENCH_FAIL_AFTER_SETUP")
-            result.update(run(spark, a))
+        result.update(run(spark, a))
     finally:
         t0 = time.monotonic()
         stop_spark(spark)
