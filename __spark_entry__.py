@@ -86,9 +86,11 @@ def _battles(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _frames(spark: SparkSession) -> dict:
+def _frames(spark: SparkSession, sink: str) -> dict:
+    """Plans for the one sink a query reads (build_frames builds only
+    what that sink needs)."""
     from stats_spark.plans import pipeline
-    return pipeline.build_frames(spark, _battles(spark))
+    return pipeline.build_frames(spark, _battles(spark), sinks=[sink])
 
 
 def _battles_glob() -> str:
@@ -569,7 +571,7 @@ def tr_rejects(spark, sf_dir):
 
 
 def tr_usage_weighted(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "usage")
     return f["usage"].select(
         "format", "cutoff", "species", "raw_count",
         F.round("raw_weight", 6).alias("raw_weight"))
@@ -577,7 +579,7 @@ def tr_usage_weighted(spark, sf_dir):
 
 def tr_usage_report(spark, sf_dir):
     from pyspark.sql import Window
-    f = _frames(spark)
+    f = _frames(spark, "usage")
     u = f["usage"].filter(F.col("cutoff") == 1630) \
         .withColumn("w6", F.round("usage_weighted", 6))
     tot = (u.groupBy("format")
@@ -593,48 +595,48 @@ def tr_usage_report(spark, sf_dir):
 
 
 def tr_leads_raw(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "leads")
     return (f["leads"].filter(F.col("cutoff") == 0)
             .select("format", "species", "lead_raw"))
 
 
 def tr_teammate_pairs(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "teammates")
     return (f["teammates"].filter((F.col("cutoff") == 0)
                                   & (F.col("species") < F.col("teammate")))
             .select("format", "species", "teammate", "raw"))
 
 
 def tr_encounters(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "encounters")
     return f["encounters"].filter(F.col("cutoff") == 1500).select(
         "format", "species", "opponent",
         *[F.round(f"o{i}", 6).alias(f"o{i}") for i in range(13)])
 
 
 def tr_moveset(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "moveset")
     return (f["moveset"].filter(F.col("cutoff") == 1630)
             .select("format", "species", "section", "key",
                     F.round("weight", 6).alias("weight"), "raw"))
 
 
 def tr_metagame(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "metagame")
     return f["metagame"].select("format", "cutoff", "tag",
                                 F.round("weight", 6).alias("weight"))
 
 
 def tr_usage_by_tag(spark, sf_dir):
     """A13 single-pass tag fan-out (classifier-derived shards)."""
-    f = _frames(spark)
+    f = _frames(spark, "usage_tagged")
     return (f["usage_tagged"].filter(F.col("cutoff") == 1500)
             .select("format", "tag", "species", "raw_count",
                     F.round("usage_weighted", 6).alias("usage_weighted")))
 
 
 def tr_viability(spark, sf_dir):
-    f = _frames(spark)
+    f = _frames(spark, "viability")
     return f["viability"].filter(F.col("cutoff") == 0).select(
         "format", "species", "n", "gxe_max", "gxe_p1", "gxe_p20")
 

@@ -10,11 +10,13 @@ from __future__ import annotations
 import hashlib
 import importlib.util
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -53,7 +55,7 @@ def table_hash(rows, cols):
 
 def main():
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py")
+        "entry", os.path.join(ROOT, "__spark_entry__.py"))
     e = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(e)
 

@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 EVDIR = "/tmp/spark-events"
 
@@ -36,7 +37,7 @@ def run(n_exec: int, n_convs: int, mem_mb: int, cores: int = 2) -> None:
          .config("spark.ui.enabled", "false")
          .config("spark.eventLog.enabled", "true")
          .config("spark.eventLog.dir", EVDIR)
-         .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+         .config("spark.executorEnv.PYTHONPATH", ROOT)
          .config("spark.sql.shuffle.partitions", "32"))
     for k, v in {**SQL_CONF, **LOCAL_SQL_CONF}.items():
         b = b.config(k, v)

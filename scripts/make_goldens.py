@@ -5,7 +5,8 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from stats_spark.session import get_spark            # noqa: E402
 from stats_spark.datagen import corpus               # noqa: E402
@@ -13,7 +14,7 @@ from stats_spark.operators.parse import parse_battles  # noqa: E402
 from stats_spark.plans import pipeline, reports      # noqa: E402
 from stats_spark.sources import tables               # noqa: E402
 
-GOLDEN_DIR = "/root/repo/tests/golden"
+GOLDEN_DIR = os.path.join(ROOT, "tests", "golden")
 
 
 def main():

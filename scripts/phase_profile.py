@@ -4,10 +4,12 @@ Usage: python scripts/phase_profile.py <cores> <n_convs>
 Prints PHASE lines (parse / cache per frame / each sink solo).
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from stats_spark.session import get_spark                  # noqa: E402
 from stats_spark.datagen import corpus                     # noqa: E402
@@ -24,7 +26,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     c = corpus.ensure_corpus("bench")
     tr, cv = tables.load_transcripts(spark, c), tables.load_conversations(spark, c)
-    out = f"/root/repo/data/phase_{cores}"
+    out = os.path.join(ROOT, "data", f"phase_{cores}")
 
     t0 = time.time()
     battles = parse_battles(tr, cv)

@@ -12,10 +12,12 @@ Checks, per operator:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from stats_spark.session import get_spark  # noqa: E402
 
@@ -40,7 +42,7 @@ def runtime_codegen_gate() -> int:
     actually compiled."""
     import subprocess
     code = r"""
-import sys, tempfile, os; sys.path.insert(0, "/root/repo")
+import tempfile, os
 from stats_spark.session import get_spark
 from stats_spark.datagen import corpus
 from stats_spark.plans import pipeline
@@ -64,7 +66,7 @@ B.write_db(B.encode_logs(bt, gen=1), _db, gen=1, n_files=2)
 B.stats_from_db(spark, _db, gen=1)["usage"].count()
 import importlib.util
 spec = importlib.util.spec_from_file_location(
-    "entry", "/root/repo/__spark_entry__.py")
+    "entry", "__spark_entry__.py")
 e = importlib.util.module_from_spec(spec); spec.loader.exec_module(e)
 qs = e.queries()
 for q in ("doc_minhash_lsh", "doc_simhash", "emb_cosine_topk",
@@ -72,7 +74,7 @@ for q in ("doc_minhash_lsh", "doc_simhash", "emb_cosine_topk",
     qs[q](spark, "/root/testdata/sf0.01") \
         .write.format("noop").mode("overwrite").save()
 """
-    r = subprocess.run([sys.executable, "-c", code],
+    r = subprocess.run([sys.executable, "-c", code], cwd=ROOT,
                        capture_output=True, text=True, timeout=3600)
     if r.returncode != 0:
         print(r.stderr[-1500:], file=sys.stderr)
@@ -276,7 +278,7 @@ def main():
         "WholeStageCodegen nodes alone are blind to janino fallback",
         "(the r05 audit's false green on the binary decode).",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote PLANS.md;", "ALL OK" if not bad else f"FAILURES: {bad}")
     sys.exit(1 if bad else 0)

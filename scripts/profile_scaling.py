@@ -10,10 +10,12 @@ Usage: python scripts/profile_scaling.py [n_convs] [execs...]
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import scripts.scaling as scaling
 

@@ -82,15 +82,15 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-HISTORY_PATH = "/root/repo/data/sentinel_history.json"
-LEGS_PATH = "/root/repo/data/scaling_legs_{n}_{low}_{high}.json"
-PAIRS_PATH = "/root/repo/data/scaling_pairs_{n}_{low}_{high}.json"
+HISTORY_PATH = os.path.join(ROOT, "data", "sentinel_history.json")
+LEGS_PATH = os.path.join(ROOT, "data", "scaling_legs_{n}_{low}_{high}.json")
+PAIRS_PATH = os.path.join(ROOT, "data", "scaling_pairs_{n}_{low}_{high}.json")
 
 WORKER = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 cores, n_convs = int(sys.argv[1]), int(sys.argv[2])
 from stats_spark.session import get_spark
 from stats_spark.datagen import corpus
@@ -161,7 +161,7 @@ def save_json(path, obj):
 def run_level(cores: int, n_convs: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", WORKER, str(cores), str(n_convs)],
-        capture_output=True, text=True, timeout=7200)
+        cwd=ROOT, capture_output=True, text=True, timeout=7200)
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     return json.loads(line)
 
@@ -541,13 +541,13 @@ Measured by `scripts/scaling.py {p.n_convs} {low} {high}`;
     # retained evidence sections (waste forensics, fixed-cost method,
     # streaming micro-bench, headline config) live in a supplement file
     # so protocol reruns don't erase them
-    supp = "/root/repo/scripts/bench_supplement.md"
+    supp = os.path.join(ROOT, "scripts", "bench_supplement.md")
     if os.path.exists(supp):
         with open(supp) as f:
             md += f.read()
-    with open("/root/repo/BENCH.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "w") as f:
         f.write(md)
-    print("wrote /root/repo/BENCH.md", file=sys.stderr)
+    print("wrote", os.path.join(ROOT, "BENCH.md"), file=sys.stderr)
 
 
 def _raw_s(q, k):

@@ -29,14 +29,14 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 EXEC_CORES = 2
 EXEC_MEM_MB = 24576
 
 WORKER = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 n_exec, n_convs = int(sys.argv[1]), int(sys.argv[2])
 # local-cluster workers IGNORE spark.local.dir (cluster manager owns
 # it) — SPARK_LOCAL_DIRS env is what the executor JVMs actually honor.
@@ -57,7 +57,7 @@ b = (SparkSession.builder
      .config("spark.local.dir", "/dev/shm/spark-local")
      .config("spark.executor.extraJavaOptions", EXECUTOR_JVM_FLAGS)
      .config("spark.ui.enabled", "false")
-     .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+     .config("spark.executorEnv.PYTHONPATH", os.getcwd())
      .config("spark.sql.shuffle.partitions", "32"))
 for k, v in {**SQL_CONF, **LOCAL_SQL_CONF}.items():
     b = b.config(k, v)
@@ -110,7 +110,7 @@ def _BURN(n):
 def run_level(n_exec: int, n_convs: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", WORKER, str(n_exec), str(n_convs)],
-        capture_output=True, text=True, timeout=7200)
+        cwd=ROOT, capture_output=True, text=True, timeout=7200)
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     return json.loads(line)
 
@@ -192,9 +192,9 @@ bounds ANY job's raw efficiency at {hw_ceiling} on this box.
 Measured by `scripts/scaling.py {n_convs} {low} {high}`;
 `bench.py` reports the per-round headline numbers the driver records.
 """
-    with open("/root/repo/BENCH.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "w") as f:
         f.write(md)
-    print("wrote /root/repo/BENCH.md")
+    print("wrote", os.path.join(ROOT, "BENCH.md"))
 
 
 if __name__ == "__main__":

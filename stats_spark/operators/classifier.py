@@ -249,7 +249,7 @@ def move_mask_col(moves_col: str = "moves") -> F.Column:
     mp = F.create_map(*entries)
     return F.aggregate(
         F.transform(F.col(moves_col),
-                    lambda m: F.coalesce(mp.getItem(m), F.lit(0).cast("long"))),
+                    lambda m: F.coalesce(mp[m], F.lit(0).cast("long"))),
         F.lit(0).cast("long"), lambda acc, v: acc.bitwiseOR(v))
 
 

@@ -265,7 +265,7 @@ def cutoff_array_col(cutoffs=dims.DEFAULT_CUTOFFS):
             entries += [F.lit(fmt), F.array(*[F.lit(c) for c in cs])]
         mp = F.create_map(*entries)
         default = F.array(*[F.lit(c) for c in dims.DEFAULT_CUTOFFS])
-        return F.coalesce(mp.getItem(F.col("format")), default)
+        return F.coalesce(mp[F.col("format")], default)
     return F.array(*[F.lit(c) for c in cutoffs])
 
 

@@ -132,38 +132,89 @@ def battles_weighted(battles: DataFrame,
     return df.drop("_wx_p1", "_wx_p2")
 
 
+SINKS = ["usage", "usage_tagged", "usage_totals", "moveset", "teammates",
+         "encounters", "leads", "battle_counts", "metagame", "stalliness",
+         "viability"]
+
+# the shared intermediate each frame's plan reads — build_frames builds,
+# and stages or caches, only what the requested sinks reach through it.
+# unique_players is viability's input (not a routed sink); rejects
+# reads the battles frame alone.
+SINK_INPUT = {
+    **dict.fromkeys(("usage_tagged", "usage", "usage_totals", "moveset",
+                     "unique_players", "viability"), "mons_w"),
+    **dict.fromkeys(("teammates", "metagame", "stalliness"), "sides_w"),
+    **dict.fromkeys(("encounters", "leads", "battle_counts"), "battles_w"),
+    "rejects": "battles",
+}
+
+# the intermediates build_frames can hold (cache or stage), in
+# dependency order
+HELD = ("mons", "side_class", "mons_w", "sides_w", "battles_w")
+
+# the battles_w-only aggregates, by sink name
+BW_PLANS = {"encounters": agg.encounters, "leads": agg.leads,
+            "battle_counts": agg.battle_counts}
+
+
 def build_frames(spark: SparkSession, battles: DataFrame,
                  cutoffs=dims.DEFAULT_CUTOFFS,
                  cache: bool = False,
                  stage_dir: str | None = None,
-                 on_battles_w=None) -> dict:
-    """All aggregate DataFrames (lazy) from a parsed battles frame.
+                 on_battles_w=None,
+                 sinks=(*SINKS, "rejects")) -> dict:
+    """Lazy aggregate DataFrames for ``sinks`` from a parsed battles
+    frame — demand-driven: only the plans the requested sinks read are
+    built, and only the shared intermediates they read (``SINK_INPUT``)
+    are staged or cached.  The default (all 11 sinks plus rejects)
+    builds everything.  The returned dict holds each requested sink,
+    the sink frames it derives from (usage_tagged under usage,
+    unique_players under viability), ``battles``, the weighted frames
+    built (``_mons_w``/``_sides_w``/``_battles_w``) and ``_held``: the
+    cached or staged intermediates by name (see ``HELD``).
+
+    The intermediates: ``mons`` (the pruned enrichment, the CPU-heavy
+    pandas-UDF stage) is held only when a mons_w sink is requested —
+    mons_w and side_class both read it; ``side_class`` when a mons_w or
+    sides_w sink is; ``battles_w`` when a battles_w sink is.  A
+    battles_w-only request never runs the enrichment at all.  Plan
+    building is driver time with no Spark job running (thousands of
+    py4j round trips per sink family), so a partial run skips it too.
 
     ``on_battles_w`` (stage mode only): callback invoked with the
-    staged battles_w frame ON THE STAGING WORKER THREAD as soon as its
-    parquet lands — run_pipeline uses it to write the battles_w-only
-    sinks (encounters/leads/battle_counts) WHILE the heavier
+    requested battles_w sink plans (sink → DataFrame, read from the
+    staged parquet) ON THE STAGING WORKER THREAD as soon as battles_w
+    lands — run_pipeline uses it to write those sinks WHILE the heavier
     mons/side_class staging still runs, filling the cores the staging
     phase leaves idle (measured ~4.5 of 8 busy).  Exceptions propagate
     through the future's result().
 
-    ``cache=True`` persists the three shared intermediates (the pruned
-    enriched mons, side_class, battles_w) — every sink reuses them
+    ``cache=True`` persists the held intermediates (mons, side_class
+    and the pruned mons_w, sides_w, battles_w) — every sink reuses them
     instead of re-running the enrichment; use when materializing
-    several sinks in one job.
+    several sinks in one job.  ``_cached`` lists the cached frames in
+    that (dependency) order.
 
-    ``stage_dir`` switches to STAGED materialization: each shared
-    intermediate is written to parquet under ``stage_dir`` (eagerly, at
-    build time) and re-read, so every sink job is a cheap columnar
-    scan + aggregate with no dependence on executor-memory cache
-    locality.  This is the cluster-scale path: cached blocks live on
-    specific executors, and 11 concurrent sink jobs racing over 8+
-    executors schedule tasks non-local to the blocks, stalling on
-    remote block fetch or recompute of the pandas-UDF enrichment
-    lineage.  Parquet staging makes the expensive enrichment run
-    exactly once regardless of topology — the same reason the
-    reference checkpoints its per-format intermediates to disk
-    (logs/src/checkpoints.ts) rather than holding them in memory."""
+    ``stage_dir`` switches to STAGED materialization: each held
+    intermediate among mons, side_class and battles_w is written to
+    parquet under ``stage_dir`` (eagerly, at build time) and re-read,
+    so every sink job is a cheap columnar scan + aggregate with no
+    dependence on executor-memory cache locality.  This is the
+    cluster-scale path: cached blocks live on specific executors, and
+    11 concurrent sink jobs racing over 8+ executors schedule tasks
+    non-local to the blocks, stalling on remote block fetch or
+    recompute of the pandas-UDF enrichment lineage.  Parquet staging
+    makes the expensive enrichment run exactly once regardless of
+    topology — the same reason the reference checkpoints its
+    per-format intermediates to disk (logs/src/checkpoints.ts) rather
+    than holding them in memory."""
+    unknown = set(sinks) - SINK_INPUT.keys()
+    if unknown:
+        raise ValueError(f"unknown sinks: {sorted(unknown)}")
+    reads = {SINK_INPUT[s] for s in sinks}
+    want_bw = "battles_w" in reads
+    want_mons_w = "mons_w" in reads
+    want_sides_w = "sides_w" in reads
     stage = None
     if stage_dir is not None:
         cache = False
@@ -187,25 +238,43 @@ def build_frames(spark: SparkSession, battles: DataFrame,
                 rd = rd.repartition(par)
             return rd
 
-    # J5: all downstream routing — gates, cutoffs, aggregation keys,
-    # sink partitions — uses the CANONICAL format name, so historical
-    # eras merge into their modern trees exactly as the reference's
-    # setupApply does (workflows/smogon/stats.ts:124-130).  The accept
-    # filter stays on the raw name (it runs upstream of
-    # canonicalization in the reference too: logs/src/worker.ts:25-28).
-    ok = (enrich.accepted_battles(battles)
-          .withColumn("format", enrich.canonical_format_map_col()))
-    # battles is compact on disk (a 150k-conversation checkpoint is a
-    # few dozen MB) so the scan yields only 1-2 input partitions — but
-    # each row fans out ×48 downstream (2 sides × 6 mons × 4 cutoffs).
-    # Re-spread by bytes-cheap shuffle so every later stage parallelizes.
-    # ×4 granularity: the pandas-UDF enrichment inherits this count; at
-    # ×2 it ran exactly 2 waves with a 40 s max / 78 s mean-of-8 task
-    # spread (event-log audit), wasting ~a straggler tail per wave.
-    ok = ok.repartition(battles.sparkSession.sparkContext.defaultParallelism * 4)
+    frames = dict(battles=battles)
+    held: dict[str, DataFrame] = {}  # name → cached / staged frame
+
+    def hold(df: DataFrame, name: str) -> DataFrame:
+        if cache:
+            df = df.cache()
+        elif stage:
+            df = stage(df, name)
+        held[name] = df
+        return df
+
+    if want_bw or want_mons_w or want_sides_w:
+        # J5: all downstream routing — gates, cutoffs, aggregation
+        # keys, sink partitions — uses the CANONICAL format name, so
+        # historical eras merge into their modern trees exactly as the
+        # reference's setupApply does (workflows/smogon/stats.ts:124-
+        # 130).  The accept filter stays on the raw name (it runs
+        # upstream of canonicalization in the reference too:
+        # logs/src/worker.ts:25-28).
+        ok = (enrich.accepted_battles(battles)
+              .withColumn("format", enrich.canonical_format_map_col()))
+        # battles is compact on disk (a 150k-conversation checkpoint is
+        # a few dozen MB) so the scan yields only 1-2 input partitions
+        # — but each row fans out ×48 downstream (2 sides × 6 mons × 4
+        # cutoffs).  Re-spread by bytes-cheap shuffle so every later
+        # stage parallelizes.  ×4 granularity: the pandas-UDF
+        # enrichment inherits this count; at ×2 it ran exactly 2 waves
+        # with a 40 s max / 78 s mean-of-8 task spread (event-log
+        # audit), wasting ~a straggler tail per wave.
+        ok = ok.repartition(
+            battles.sparkSession.sparkContext.defaultParallelism * 4)
+
+    def bw_plans(bw: DataFrame) -> dict:
+        return {s: BW_PLANS[s](bw) for s in BW_PLANS if s in sinks}
 
     bw_future, _bw_pool = None, None
-    if stage:
+    if stage and want_bw:
         # battles_w derives from the battles checkpoint alone — no
         # dependence on the enrichment lineage — so its staging write
         # overlaps the mons/side_class staging instead of queueing
@@ -215,77 +284,88 @@ def build_frames(spark: SparkSession, battles: DataFrame,
         _bw_pool = ThreadPoolExecutor(max_workers=1)
 
         def _stage_bw():
-            df = stage(battles_weighted(ok, cutoffs).select(*BW_COLS),
-                       "battles_w")
+            df = hold(battles_weighted(ok, cutoffs).select(*BW_COLS),
+                      "battles_w")
+            plans = bw_plans(df)
             if on_battles_w is not None:
-                on_battles_w(df)
-            return df
+                on_battles_w(plans)
+            return df, plans
 
         bw_future = _bw_pool.submit(_stage_bw)
 
     try:
-        sides = enrich.with_effective_rating(enrich.sides_from_battles(ok))
-        # enrichment (stats + classifier columns) is the CPU-heavy stage;
-        # prune it to the columns the aggregates consume and cache ONCE —
-        # side_class, mons_w and sides_w all derive from this single frame
-        # instead of re-running the enrichment per consumer
-        from stats_spark.operators.classifier import _COUNTERS
-        mons = enrich.enrich_mons(sides, spark).select(
-            "conv_id", "side", "format", "species", "player",
-            "rating_valid", "short", "outcome", "turns_out", "gxe",
-            "ability", "item", "tera_type", "happiness", "spread",
-            "stats_str", "moves", "stalliness", "bias", "base_types",
-            "eff_rpr", "eff_rprd",
-            *[f"w_{w}" for w in ("rain", "sun", "sand", "hail")], *_COUNTERS)
-        if cache:
-            mons = mons.cache()
-        elif stage:
-            mons = stage(mons, "mons")
-        side_class = enrich.classify_sides(mons)
-        if cache:
-            side_class = side_class.cache()
-        elif stage:
-            side_class = stage(side_class, "side_class")
+        if want_mons_w or want_sides_w:
+            sides = enrich.with_effective_rating(
+                enrich.sides_from_battles(ok))
+            # enrichment (stats + classifier columns) is the CPU-heavy
+            # stage; prune it to the columns the aggregates consume and
+            # hold it ONCE when both side_class and mons_w read it,
+            # instead of re-running the enrichment per consumer
+            from stats_spark.operators.classifier import _COUNTERS
+            mons = enrich.enrich_mons(sides, spark).select(
+                "conv_id", "side", "format", "species", "player",
+                "rating_valid", "short", "outcome", "turns_out", "gxe",
+                "ability", "item", "tera_type", "happiness", "spread",
+                "stats_str", "moves", "stalliness", "bias", "base_types",
+                "eff_rpr", "eff_rprd",
+                *[f"w_{w}" for w in ("rain", "sun", "sand", "hail")],
+                *_COUNTERS)
+            if want_mons_w:
+                mons = hold(mons, "mons")
+            side_class = hold(enrich.classify_sides(mons), "side_class")
 
-        # side tags ride along on every mon row so the A13 tag fan-out is a
-        # plain explode downstream (single pass for total + all tag shards)
-        mons_j = mons.join(side_class.select("conv_id", "side", "tags"),
-                           ["conv_id", "side"])
         # WIDE cutoff shape: cutoff_0..3/w_0..3 columns, NOT ×4 rows —
         # the aggregates sum the four weight columns in one pass and
         # unpivot the grouped output (aggregate._stacked).  The explode
         # form quadrupled every shuffle row and hash-agg probe, making
         # the sink phase memory-bound at high core counts (BENCH.md).
+        # Past the held mons / side_class, the cutoff weighting is
+        # pure whole-stage codegen: stage mode does NOT stage mons_w /
+        # sides_w — cheaper for each sink to recompute from the staged
+        # scans than to double-write the weighted parquet through a
+        # half-utilized serial barrier (measured: staging them ran the
+        # phase at ~4.5/8 cores).  Cache mode caches them pruned to
+        # the aggregate columns (the full frame is ~45 cols).
+        prune = cache or stage
         wx = [f"cutoff_{i}" for i in range(enrich.N_CUTOFFS)] + \
              [f"w_{i}" for i in range(enrich.N_CUTOFFS)]
-        mons_w = enrich.with_cutoff_weights(mons_j, cutoffs)
-        sides_w = enrich.with_cutoff_weights(
-            sides.join(side_class, ["conv_id", "side"]), cutoffs)
-        if stage:
-            # mons_w / sides_w are NOT staged: past the staged mons /
-            # side_class, the cutoff weighting is pure whole-stage
-            # codegen — cheaper for each sink to recompute from the
-            # staged scans than to double-write the weighted parquet
-            # through a half-utilized serial barrier (measured: staging
-            # them ran the phase at ~4.5/8 cores)
-            battles_w = bw_future.result()
-        else:
-            battles_w = battles_weighted(ok, cutoffs)
-        if cache or stage:
-            # second level: the weighted frames every sink consumes —
-            # pruned to the aggregate columns (the full frame is ~45 cols)
-            mons_w = mons_w.select(
-                "format", "species", "player",
-                "rating_valid", "short", "outcome", "turns_out", "gxe",
-                "ability", "item", "tera_type", "happiness", "spread",
-                "stats_str", "moves", "tags", *wx)
-            sides_w = sides_w.select(
-                "conv_id", "format", "side", "short",
-                "team", "team_size", "tags", "team_stalliness", *wx)
+        if want_mons_w:
+            # side tags ride along on every mon row so the A13 tag
+            # fan-out is a plain explode downstream (single pass for
+            # total + all tag shards)
+            mons_j = mons.join(side_class.select("conv_id", "side", "tags"),
+                               ["conv_id", "side"])
+            mons_w = enrich.with_cutoff_weights(mons_j, cutoffs)
+            if prune:
+                mons_w = mons_w.select(
+                    "format", "species", "player",
+                    "rating_valid", "short", "outcome", "turns_out", "gxe",
+                    "ability", "item", "tera_type", "happiness", "spread",
+                    "stats_str", "moves", "tags", *wx)
             if cache:
-                battles_w = battles_w.select(*BW_COLS)
-                mons_w, sides_w, battles_w = (
-                    mons_w.cache(), sides_w.cache(), battles_w.cache())
+                mons_w = hold(mons_w, "mons_w")
+            frames["_mons_w"] = mons_w
+        if want_sides_w:
+            sides_w = enrich.with_cutoff_weights(
+                sides.join(side_class, ["conv_id", "side"]), cutoffs)
+            if prune:
+                sides_w = sides_w.select(
+                    "conv_id", "format", "side", "short",
+                    "team", "team_size", "tags", "team_stalliness", *wx)
+            if cache:
+                sides_w = hold(sides_w, "sides_w")
+            frames["_sides_w"] = sides_w
+        if want_bw:
+            if stage:
+                battles_w, plans = bw_future.result()
+            else:
+                battles_w = battles_weighted(ok, cutoffs)
+                if cache:
+                    battles_w = hold(battles_w.select(*BW_COLS),
+                                     "battles_w")
+                plans = bw_plans(battles_w)
+            frames["_battles_w"] = battles_w
+            frames.update(plans)
     finally:
         if _bw_pool is not None:
             # on the success path result() already ran — shutdown is a
@@ -295,35 +375,41 @@ def build_frames(spark: SparkSession, battles: DataFrame,
             bw_future.cancel()
             _bw_pool.shutdown(wait=False, cancel_futures=True)
 
-    usage_tagged = agg.usage_by_species_tagged(agg.with_tag_dimension(mons_w))
-    # the usage family derives from the ONE tagged aggregation (its
-    # 'total' shard is usage_by_species column-for-column)
-    usage = agg.usage_from_tagged(usage_tagged)
-    frames = dict(
-        # materialization order matters: mons first (one enrichment
-        # pass), then side_class (from cached mons), then the ×cutoff
-        # frames (from both caches)
-        _cached=([mons, side_class, mons_w, sides_w, battles_w]
-                 if cache else []),
-        _mons_w=mons_w, _sides_w=sides_w, _battles_w=battles_w,
-        battles=battles,
+    # materialization order matters: mons first (one enrichment pass),
+    # then side_class (from cached mons), then the ×cutoff frames
+    frames["_held"] = {k: held[k] for k in HELD if k in held}
+    frames["_cached"] = list(frames["_held"].values()) if cache else []
+
+    def want(*names) -> bool:
+        return any(n in sinks for n in names)
+
+    if want("usage_tagged", "usage", "usage_totals"):
+        frames["usage_tagged"] = agg.usage_by_species_tagged(
+            agg.with_tag_dimension(frames["_mons_w"]))
+    if want("usage", "usage_totals"):
+        # the usage family derives from the ONE tagged aggregation (its
+        # 'total' shard is usage_by_species column-for-column)
+        frames["usage"] = agg.usage_from_tagged(frames["usage_tagged"])
+    if want("usage_totals"):
+        frames["usage_totals"] = agg.usage_totals(frames["usage"])
+    if want("moveset"):
+        frames["moveset"] = agg.moveset_maps(frames["_mons_w"])
+    if want("unique_players", "viability"):
+        frames["unique_players"] = agg.unique_players(frames["_mons_w"])
+    if want("viability"):
+        frames["viability"] = agg.viability(frames["unique_players"])
+    if want("teammates"):
+        frames["teammates"] = agg.teammates(frames["_sides_w"])
+    if want("metagame"):
+        frames["metagame"] = agg.metagame(frames["_sides_w"])
+    if want("stalliness"):
+        frames["stalliness"] = agg.stalliness_samples(frames["_sides_w"])
+    if want("rejects"):
         # rejects key canonical too — the reference counts parse
         # rejects under the canonicalized batch format
-        rejects=enrich.rejected_battles(battles)
-               .withColumn("format", enrich.canonical_format_map_col()),
-        usage=usage,
-        usage_tagged=usage_tagged,
-        usage_totals=agg.usage_totals(usage),
-        moveset=agg.moveset_maps(mons_w),
-        teammates=agg.teammates(sides_w),
-        encounters=agg.encounters(battles_w),
-        leads=agg.leads(battles_w),
-        battle_counts=agg.battle_counts(battles_w),
-        metagame=agg.metagame(sides_w),
-        stalliness=agg.stalliness_samples(sides_w),
-        unique_players=agg.unique_players(mons_w),
-    )
-    frames["viability"] = agg.viability(frames["unique_players"])
+        frames["rejects"] = (enrich.rejected_battles(battles)
+                             .withColumn("format",
+                                         enrich.canonical_format_map_col()))
     return frames
 
 
@@ -356,25 +442,25 @@ def _parquet_rows(path: str) -> int:
                                    recursive=True))
 
 
-SINKS = ["usage", "usage_tagged", "usage_totals", "moveset", "teammates",
-         "encounters", "leads", "battle_counts", "metagame", "stalliness",
-         "viability"]
-
-
 def completed_sinks(spark: SparkSession, out_dir: str,
                     job: str = "stats_pipeline") -> set[str]:
     """Sinks the lineage ledger records as committed AND whose output
     still carries a _SUCCESS marker — the resume predicate
-    (logs/src/checkpoints.ts:31-47 analog)."""
-    lin = tables.read_lineage(spark, out_dir)
-    if lin is None:
+    (logs/src/checkpoints.ts:31-47 analog).
+
+    Read on the driver with pyarrow, the way tables.write_lineage
+    writes it: the ledger is a few rows per commit, and reading it
+    through Spark cost a job per run (~0.2 s warm, ~4 s as a JVM's
+    first read).  ``spark`` is unused; kept for the call sites."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(out_dir, "_lineage")
+    if not os.path.isdir(path):
         return set()
-    done = set()
-    for r in lin.filter(F.col("job") == job) \
-                .select("partition", "path").collect():
-        if os.path.exists(os.path.join(r.path, "_SUCCESS")):
-            done.add(r.partition)
-    return done
+    rows = pq.read_table(path, columns=["job", "partition", "path"])
+    return {r["partition"] for r in rows.to_pylist()
+            if r["job"] == job
+            and os.path.exists(os.path.join(r["path"], "_SUCCESS"))}
 
 
 def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
@@ -392,6 +478,12 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
     reused when its _SUCCESS marker exists, and any sink the lineage
     ledger records as committed (with its output intact) is skipped —
     only missing/incomplete sinks are recomputed.
+
+    Demand-driven: the sinks left to write (``sinks`` minus the ledger's
+    committed ones, plus rejects unless committed) go to build_frames,
+    so the driver builds only their plans and Spark stages or caches
+    only the intermediates they read — a battles_w-only resume never
+    runs the enrichment, and a run with nothing left builds nothing.
 
     ``date`` ('YYYY-MM') switches to the reference's date/format-
     dependent cutoff sets (popular formats get [0,1500,1695,1825]).
@@ -460,22 +552,21 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
             tables.write_lineage(spark, out_dir, "stats_pipeline", [m])
             return m
 
-        # battles_w-only sinks, written from the staged battles_w on
-        # the staging worker thread — they run WHILE mons/side_class
-        # still stage, on the cores that phase leaves idle
-        BW_SINKS = ("encounters", "leads", "battle_counts")
+        # battles_w-only sinks, written from battles_w as soon as it is
+        # live — in stage mode on the staging worker thread, WHILE
+        # mons/side_class still stage, on the cores that phase leaves
+        # idle.  build_frames built exactly the ones in todo.
         overlap_metrics: list[dict] = []
 
-        def on_bw(bw_df: DataFrame) -> None:
-            frames_bw = dict(encounters=agg.encounters(bw_df),
-                             leads=agg.leads(bw_df),
-                             battle_counts=agg.battle_counts(bw_df))
-            subs = [s for s in BW_SINKS if s in todo]
-            if subs:
-                with ThreadPoolExecutor(max_workers=len(subs)) as p:
+        def on_bw(plans: dict) -> None:
+            if plans:
+                with ThreadPoolExecutor(max_workers=len(plans)) as p:
                     overlap_metrics.extend(
-                        p.map(lambda s: write_df(s, frames_bw[s]), subs))
+                        p.map(lambda s: write_df(s, plans[s]), plans))
 
+        # demand-driven: only the todo sinks' plans are built, and only
+        # the intermediates they read are staged or cached
+        wanted = todo + ([] if "rejects" in done else ["rejects"])
         # mat_gate[sink]() blocks until the cache that sink consumes is
         # materialized (cache mode only; staged mode materializes
         # everything before the pool starts, so no gates are needed)
@@ -489,10 +580,11 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
             frames = build_frames(spark, battles, cutoffs,
                                   stage_dir=os.path.join(out_dir,
                                                          "_stage"),
-                                  on_battles_w=on_bw)
+                                  on_battles_w=on_bw, sinks=wanted)
             t_cache = time.time() - t1
         else:
-            frames = build_frames(spark, battles, cutoffs, cache=True)
+            frames = build_frames(spark, battles, cutoffs, cache=True,
+                                  sinks=wanted)
             # PIPELINED materialization: the sink pool starts
             # immediately and each sink gates on the future of the ONE
             # cache it consumes, so sinks launch the moment their
@@ -507,39 +599,37 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
             # cache builds leave idle.  FIFO job scheduling interleaves
             # it all; each cache is counted exactly once by its own
             # future, so no sink ever computes uncached partitions.
-            (mons_c, side_c, mons_w_c, sides_w_c,
-             battles_w_c) = frames["_cached"]
+            # Only the caches some todo sink reads exist at all.
+            held = frames["_held"]
             mat_pool = ThreadPoolExecutor(max_workers=4)
 
             def mat_base():
-                mons_c.count()
-                side_c.count()
+                for k in ("mons", "side_class"):
+                    if k in held:
+                        held[k].count()
                 mat_done["base"] = time.time()
 
             base_fut = mat_pool.submit(mat_base)
 
-            def after_base(df, key):
+            def after_base(key):
                 base_fut.result()
-                df.count()
+                held[key].count()
                 mat_done[key] = time.time()
 
-            mons_w_fut = mat_pool.submit(after_base, mons_w_c, "mons_w")
-            sides_w_fut = mat_pool.submit(after_base, sides_w_c,
-                                          "sides_w")
+            for key in ("mons_w", "sides_w"):
+                if key in held:
+                    fut = mat_pool.submit(after_base, key)
+                    for s, src in SINK_INPUT.items():
+                        if src == key:
+                            mat_gate[s] = fut.result
 
             def _bw_overlap():
-                if not any(s in todo for s in BW_SINKS):
-                    return  # nothing consumes battles_w this run
-                battles_w_c.count()  # materialize the battles_w cache
+                held["battles_w"].count()  # materialize the cache
                 mat_done["battles_w"] = time.time()
-                on_bw(battles_w_c)
+                on_bw({s: frames[s] for s in BW_PLANS if s in frames})
 
-            bw_future = mat_pool.submit(_bw_overlap)
-            for s in ("usage_tagged", "usage", "usage_totals",
-                      "moveset", "viability"):
-                mat_gate[s] = mons_w_fut.result
-            for s in ("teammates", "metagame", "stalliness"):
-                mat_gate[s] = sides_w_fut.result
+            if "battles_w" in held:
+                bw_future = mat_pool.submit(_bw_overlap)
         t2 = time.time()
 
         # the usage family chains off ONE aggregation: usage_tagged's
@@ -595,10 +685,8 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
         HEAVY = ("moveset", "teammates", "viability")
         # the battles_w sinks are written by the overlap path (on_bw /
         # _bw_overlap) in BOTH modes — never by the pool
-        overlap_handled = {s for s in BW_SINKS if s in todo}
         plain = sorted((s for s in todo
-                        if s not in overlap_handled
-                        and s not in USAGE_CHAIN),
+                        if s not in BW_PLANS and s not in USAGE_CHAIN),
                        key=lambda s: s not in HEAVY)
         def write_sink(s: str) -> list[dict]:
             gate = mat_gate.get(s)

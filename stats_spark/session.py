@@ -46,7 +46,24 @@ SQL_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # DataFrame call-site capture OFF.  PySpark wraps every Column /
+    # DataFrame function (pyspark.errors.utils._with_origin); with this
+    # on, each call walks the Python stack and makes ~4-5 extra py4j
+    # round trips (active-session lookup, a conf read, origin set and
+    # clear).  Plan building makes thousands of such calls per job:
+    # building every sink plan took 28k round trips and 5.8-6.8 s with
+    # it on, 11k and 3.4-4.3 s with it off (4-vCPU host, warm JVM).
+    # Trade-off: a DataFrame error message no longer names the Python
+    # line that built the failing expression; the JVM error itself is
+    # unchanged.  Static conf, and PySpark caches it process-wide on
+    # first use, so it must be set before the context starts (see
+    # get_submit_spark).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+# SQL_CONF entries that are static: fixed when the SparkContext starts,
+# so a post-getOrCreate ``spark.conf.set`` cannot apply them
+STATIC_SQL_CONF = frozenset({"spark.python.sql.dataFrameDebugging.enabled"})
 
 # Scan-split sizing — LOCAL/BENCH FACTORY ONLY (get_spark below), never
 # the spark-submit path.  The pipeline's intermediates (battles
@@ -73,20 +90,30 @@ def get_submit_spark(app_name: str = "stats_spark_job",
     mode, memory and executor topology come from the submit command
     line / cluster manager; only the SQL-layer defaults are applied
     here (and never override an explicit ``--conf``)."""
+    from pyspark import SparkConf, SparkContext
+
+    # the launcher's --conf entries are JVM system properties, which a
+    # SparkConf loads once the py4j gateway is up
+    SparkContext._ensure_initialized()
+    submitted = SparkConf()
+    conf = {k: v for k, v in {**SQL_CONF, **(extra_conf or {})}.items()
+            if not submitted.contains(k)}
     builder = SparkSession.builder.appName(app_name)
+    # static confs are fixed once the context starts: they ride the
+    # builder, the rest are set on the live session
+    for k in STATIC_SQL_CONF & conf.keys():
+        builder = builder.config(k, conf.pop(k))
     spark = builder.getOrCreate()
-    submitted = spark.sparkContext.getConf()  # --conf entries live here
-    for k, v in {**SQL_CONF, **(extra_conf or {})}.items():
-        if not submitted.contains(k):
-            try:
-                spark.conf.set(k, v)
-            except Exception as e:
-                # only a static conf already fixed by the submit command
-                # is ignorable; a genuinely invalid key/value must
-                # surface, not vanish
-                if "Cannot modify the value of" in str(e):
-                    continue
-                raise
+    for k, v in conf.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as e:
+            # only a static conf already fixed by the submit command
+            # is ignorable; a genuinely invalid key/value must
+            # surface, not vanish
+            if "Cannot modify the value of" in str(e):
+                continue
+            raise
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

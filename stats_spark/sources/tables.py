@@ -91,9 +91,3 @@ def write_lineage(spark: SparkSession, out_dir: str, job: str,
     open(os.path.join(path, "_SUCCESS"), "a").close()
     return path
 
-
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = os.path.join(out_dir, "_lineage")
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)

@@ -12,9 +12,12 @@ deliberate act, not a drive-by:
   scan, measured as ~167 s of core-count-invariant staging cost (the
   N→4N efficiency killer; see BENCH.md).  The spark-submit path keeps
   stock defaults: at 100 TB an 8 MB split would mean ~12M scan tasks.
+- DataFrame call-site capture off: each Column/DataFrame call otherwise
+  costs ~4-5 extra py4j round trips, a large share of plan building.
 """
 
-from stats_spark.session import EXECUTOR_JVM_FLAGS, LOCAL_SQL_CONF, SQL_CONF
+from stats_spark.session import (EXECUTOR_JVM_FLAGS, LOCAL_SQL_CONF,
+                                  SQL_CONF, STATIC_SQL_CONF)
 
 
 def test_aqe_and_skew_handling_enabled():
@@ -43,6 +46,14 @@ def test_sandbox_scan_splits_do_not_leak_to_submit_path():
     # unless the deployment passes --conf explicitly
     assert "spark.sql.files.maxPartitionBytes" not in SQL_CONF
     assert "spark.sql.files.openCostInBytes" not in SQL_CONF
+
+
+def test_dataframe_call_site_capture_off():
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert SQL_CONF[key] == "false"
+    # static conf: get_submit_spark must pass it to the builder, since a
+    # post-getOrCreate conf.set cannot change it
+    assert key in STATIC_SQL_CONF
 
 
 def test_static_jit_pool_flag_present():

@@ -50,6 +50,39 @@ def test_stage_equals_cache(spark, both, sink):
     assert a == b and len(a) > 0
 
 
+PARTIAL = ["usage", "battle_counts"]
+
+
+@pytest.fixture(scope="module")
+def partial(spark, t1, tmp_path_factory):
+    outs = {}
+    for mode in ("cache", "stage"):
+        d = str(tmp_path_factory.mktemp(f"part_{mode}"))
+        m = pipeline.run_pipeline(spark, t1, d, materialize=mode,
+                                  sinks=PARTIAL)
+        outs[mode] = d, {s["partition"]: s["rows"] for s in m["sinks"]}
+    return outs
+
+
+@pytest.mark.parametrize("sink", PARTIAL + ["rejects"])
+@pytest.mark.parametrize("mode", ["cache", "stage"])
+def test_partial_run_equals_full_run(spark, both, partial, mode, sink):
+    # a two-sink run builds and holds only what those sinks read; its
+    # outputs must match the all-sinks run's, row for row
+    d, rows = partial[mode]
+    got = _rows(spark, os.path.join(d, sink))
+    assert got == _rows(spark, os.path.join(both[mode], sink))
+    assert rows[sink] == len(got)
+    assert got or sink == "rejects"  # t1 parses without rejects
+
+
+def test_partial_stage_holds_only_what_its_sinks_read(partial):
+    d, rows = partial["stage"]
+    assert set(rows) == set(PARTIAL + ["rejects"])
+    assert sorted(os.listdir(os.path.join(d, "_stage"))) == [
+        "battles_w", "mons", "side_class"]
+
+
 def test_stage_dir_holds_all_intermediates(spark, both):
     # staged = the expensive-to-compute compact frames only; the
     # ×cutoff explodes (mons_w / sides_w) are pure codegen past these
