@@ -106,8 +106,7 @@ def main():
     pipe_samples = []
     for _ in range(2):
         t0 = time.time()
-        pipeline.run_pipeline(spark, c, out_dir, checkpoint_battles=True,
-                              resume=False)
+        pipeline.run_pipeline(spark, c, out_dir, resume=False)
         pipe_samples.append(round(time.time() - t0, 3))
     timings["pipeline_total"] = min(pipe_samples)
 

@@ -47,8 +47,7 @@ def run(n_exec: int, n_convs: int, mem_mb: int, cores: int = 2) -> None:
     c = corpus.ensure_corpus("bench")
     out = os.path.join(corpus.corpus_dir("bench"), f"diag_out_{n_exec}x")
     t0 = time.time()
-    m = pipeline.run_pipeline(spark, c, out, count_rows=False,
-                          materialize="stage")
+    m = pipeline.run_pipeline(spark, c, out, materialize="stage")
     dt = time.time() - t0
     spark.stop()
     print(json.dumps(dict(n_exec=n_exec, seconds=round(dt, 2),

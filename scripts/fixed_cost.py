@@ -36,8 +36,7 @@ def main():
     c = corpus.ensure_corpus("bench", spark=spark)
     out = os.path.join(corpus.corpus_dir("bench"), f"fc_out_{cores}")
     t0 = time.time()
-    m = pipeline.run_pipeline(spark, c, out, count_rows=False,
-                              materialize=mat)
+    m = pipeline.run_pipeline(spark, c, out, materialize=mat)
     total = round(time.time() - t0, 2)
     print(json.dumps(dict(
         cores=cores, n_convs=n_convs, materialize=mat,

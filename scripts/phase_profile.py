@@ -1,7 +1,7 @@
 """Phase-instrumented pipeline run at one parallelism level.
 
 Usage: python scripts/phase_profile.py <cores> <n_convs>
-Prints PHASE lines (parse / cache per frame / each sink solo).
+Prints PHASE lines (parse / cache / each sink solo).
 """
 
 import os
@@ -36,11 +36,12 @@ def main():
     print(f"PHASE parse {time.time()-t0:.1f}", flush=True)
 
     bat = spark.read.parquet(out + "/battles")
+    t1 = time.time()
+    # build_frames(cache=True) persists and counts every held frame
     frames = pipeline.build_frames(spark, bat, cache=True)
+    print(f"PHASE cache {time.time()-t1:.1f}", flush=True)
     for k in ("_mons_w", "_sides_w", "_battles_w"):
-        t1 = time.time()
-        n = frames[k].count()
-        print(f"PHASE cache {k} {time.time()-t1:.1f} rows={n}", flush=True)
+        print(f"PHASE rows {k} {frames[k].count()}", flush=True)
 
     for s in pipeline.SINKS:
         t1 = time.time()

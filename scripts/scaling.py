@@ -105,8 +105,7 @@ c = corpus.ensure_corpus("bench", spark=spark)
 n_turns = tables.load_transcripts(spark, c).count()
 out = os.path.join(corpus.corpus_dir("bench"), f"scale_out_{cores}")
 t0 = time.time()
-m = pipeline.run_pipeline(spark, c, out, count_rows=False,
-                          materialize="stage")
+m = pipeline.run_pipeline(spark, c, out, materialize="stage")
 dt = time.time() - t0
 print(json.dumps(dict(cores=cores, seconds=round(dt, 2), turns=n_turns,
                       parse_seconds=m["parse_seconds"],

@@ -69,8 +69,7 @@ n_turns = tables.load_transcripts(spark, c).count()
 t_boot = time.time() - t_boot0
 out = os.path.join(corpus.corpus_dir("bench"), f"scale_out_{n_exec}x")
 t0 = time.time()
-m = pipeline.run_pipeline(spark, c, out, count_rows=False,
-                          materialize="stage")
+m = pipeline.run_pipeline(spark, c, out, materialize="stage")
 dt = time.time() - t0
 print(json.dumps(dict(executors=n_exec, cores=n_exec * EXEC_CORES,
                       seconds=round(dt, 2), turns=n_turns,

@@ -324,11 +324,6 @@ def move_attributes() -> pd.DataFrame:
 
 
 @lru_cache(maxsize=1)
-def move_attr_dict() -> dict[str, dict]:
-    return {r["move_id"]: r for r in move_attributes().to_dict("records")}
-
-
-@lru_cache(maxsize=1)
 def items_table() -> pd.DataFrame:
     """dim_items — includes mega stones for the J3 mega-derivation join
     (util.ts:67-93 analog) plus the Red Card / Eject Button analogs the

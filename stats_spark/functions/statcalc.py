@@ -54,12 +54,3 @@ def base_stalliness(hp: Column, atk: Column, spa: Column, df: Column,
     return (F.when(species == "shedinja", F.lit(0.0))
              .when(species == "ditto", F.lit(LOG3_LOG2))
              .otherwise(expr))
-
-
-def stalliness_bucket(stalliness: Column) -> Column:
-    """Team playstyle bucket — classifier.ts:355-377."""
-    return (F.when(stalliness <= -1.0, "hyperoffense")
-             .when(stalliness < 0.0, "offense")
-             .when(stalliness < 1.0, "balance")
-             .when(stalliness < LOG3_LOG2, "semistall")
-             .otherwise("stall"))

@@ -9,16 +9,14 @@ Numpy ports of the reference's weighting math:
   - default ratings for unrated / outcome-only players
     (`/root/reference/stats/src/stats.ts:245-258`).
 
-Exposed both as numpy functions (used inside vectorized pandas UDFs)
-and as a `pandas_udf` column function for DataFrame plans.
+Exposed as numpy functions (used inside vectorized pandas UDFs) and as
+JVM-side SQL expressions for DataFrame plans (``weighting_expr``).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from stats_spark.functions.erf import erf
 
@@ -67,17 +65,6 @@ def effective_rating_np(rpr, rprd, outcome):
     out_rprd = np.where(valid, rprd,
                         np.where(outcome != 0, OUTCOME_RPRD, DEFAULT_RPRD))
     return out_rpr, out_rprd, valid
-
-
-@F.pandas_udf(DoubleType())
-def weighting_udf(rpr: pd.Series, rprd: pd.Series, cutoff: pd.Series) -> pd.Series:
-    return pd.Series(weighting_np(rpr.to_numpy(), rprd.to_numpy(),
-                                  cutoff.to_numpy()))
-
-
-@F.pandas_udf(DoubleType())
-def gxe_udf(rpr: pd.Series, rprd: pd.Series) -> pd.Series:
-    return pd.Series(gxe_np(rpr.to_numpy(), rprd.to_numpy()))
 
 
 def weighting_expr(rpr_col: str, rprd_col: str, cutoff_col: str) -> F.Column:

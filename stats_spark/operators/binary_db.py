@@ -46,7 +46,6 @@ from __future__ import annotations
 
 import json
 import os
-from itertools import chain
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -108,14 +107,6 @@ def wall_clock_ms(t: F.Column, *, ntz: bool = False) -> F.Column:
             + F.hour(t).cast("long") * 3600
             + F.minute(t).cast("long") * 60 + F.second(t).cast("long"))
     return secs * 1000 + F.date_format(t, "SSS").cast("long")
-
-
-def _map_expr(mapping: dict[str, int]) -> F.Column:
-    """Literal map id→index (tiny dimension, rides the query plan the
-    way the reference ships `Lookup`'s arrays)."""
-    return F.create_map(
-        *chain.from_iterable((F.lit(k), F.lit(v))
-                             for k, v in sorted(mapping.items())))
 
 
 def _lookup(mapping: dict, default=0):
@@ -646,12 +637,6 @@ def _u_le(col: F.Column, off: int, n: int) -> F.Column:
     for i in range(1, n):
         out = out + F.shiftleft(byte(i), 8 * i)
     return out
-
-
-def _rev_lookup(mapping: dict[str, int]):
-    """index → id lookup (inverse of the encoder's); CASE chain for the
-    same non-folding reason as `_lookup`, NULL for unknown indexes."""
-    return _lookup({v: k for k, v in mapping.items()}, default=None)
 
 
 def decode_db(df, gen: int = 1):

@@ -192,10 +192,6 @@ def item_sets() -> dict[str, frozenset]:
     return {k: frozenset(v) for k, v in out.items()}
 
 
-def _lit_arr(values) -> F.Column:
-    return F.array(*[F.lit(v) for v in sorted(values)])
-
-
 # ---------------------------------------------------------------------
 # move-set membership as ONE bitmask per mon
 #
@@ -257,14 +253,6 @@ def _mask_test(name: str) -> F.Column:
     """(move_mask & bit(name)) != 0 — set membership in O(1)."""
     bit = 1 << _bit_layout()[name]
     return F.col("move_mask").bitwiseAND(F.lit(bit).cast("long")) != 0
-
-
-def _has_any(moves_col, move_set) -> F.Column:
-    """True iff the mon's move list intersects the literal set (slow
-    path — kept for ad-hoc sets that have no bitmask bit)."""
-    if not move_set:
-        return F.lit(False)
-    return F.arrays_overlap(F.col(moves_col), _lit_arr(move_set))
 
 
 def _in(col, values) -> F.Column:

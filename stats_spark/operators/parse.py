@@ -543,50 +543,3 @@ def parse_battles(transcripts, conversations, dims_payload: dict | None = None):
             .withColumn("matchups",
                         F.from_json("matchups",
                                     "array<struct<a:string,b:string,outcome:int>>")))
-
-
-def parse_battles_cogroup(transcripts, conversations,
-                          dims_payload: dict | None = None):
-    """Original cogrouped formulation — kept for A/B benchmarking; the
-    packed mapInPandas path above is ~10× faster at equal semantics."""
-    D = dims_payload or make_dims_payload()
-
-    # pyarrow segfaults deserializing an EMPTY batch that carries
-    # array<struct> columns (the right side of a cogroup group with no
-    # rows).  Ship the nested team columns across the Arrow boundary as
-    # JSON (to_json is JVM-side and cheap) and decode in the UDF.
-    from pyspark.sql import functions as F
-
-    conversations = (conversations
-                     .withColumn("p1_team", F.to_json("p1_team"))
-                     .withColumn("p2_team", F.to_json("p2_team")))
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        if right.empty:
-            # transcript lines without metadata → reject
-            if not left.empty:
-                meta = dict(conv_id=left["conv_id"].iloc[0],
-                            format=left["format"].iloc[0] if "format" in left else None,
-                            day=left["day"].iloc[0] if "day" in left else None)
-                rows.append(_reject_row(meta, "No conversation metadata"))
-            return pd.DataFrame(rows)
-        meta = right.iloc[0].to_dict()
-        import json
-        for key in ("p1_team", "p2_team"):
-            team = meta.get(key)
-            if isinstance(team, str):
-                meta[key] = json.loads(team)
-            else:
-                meta[key] = [] if team is None else [dict(p) for p in team]
-        left = left.sort_values("turn_idx")  # W1 stable turn ordering
-        lines = left["text"].tolist()
-        try:
-            rows.append(parse_battle(meta, lines, D))
-        except ParseError as e:
-            rows.append(_reject_row(meta, str(e)))
-        return pd.DataFrame(rows)
-
-    return (transcripts.groupBy("conv_id")
-            .cogroup(conversations.groupBy("conv_id"))
-            .applyInPandas(fn, schema=BATTLE_SCHEMA))

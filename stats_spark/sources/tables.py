@@ -1,11 +1,10 @@
 """Table loaders and routed sinks.
 
 The production source is an Iceberg table partitioned by
-``(format, day)`` (SURVEY §2.1 S1); this environment has no Iceberg
-jars, so the loaders fall back to hive-partitioned parquet — the
+``(format, day)`` (SURVEY §2.1 S1).  The loaders here read
+hive-partitioned parquet only; there is no Iceberg path.  The
 partition-pruning behavior under ``filter(format == ...)`` is the same
-(Catalyst prunes directories).  The Iceberg path is gated behind an
-import-try so the same code ships unchanged to a real cluster.
+as an Iceberg scan's (Catalyst prunes directories).
 """
 
 from __future__ import annotations
@@ -13,21 +12,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-TPCH_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings"]
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        return True
-    except Exception:
-        return False
-
-
-def load_tpch(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_transcripts(spark: SparkSession, corpus: dict) -> DataFrame:
@@ -90,4 +74,3 @@ def write_lineage(spark: SparkSession, out_dir: str, job: str,
     # _SUCCESS marker so plain-parquet readers treat the dir as a table
     open(os.path.join(path, "_SUCCESS"), "a").close()
     return path
-

@@ -14,8 +14,7 @@ from stats_spark.plans import pipeline
 def out(spark, t1, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("resume"))
     m = pipeline.run_pipeline(spark, t1, d,
-                              sinks=["usage", "leads", "battle_counts"],
-                              count_rows=False)
+                              sinks=["usage", "leads", "battle_counts"])
     return d, m
 
 
@@ -35,7 +34,7 @@ def test_resume_skips_completed(spark, out):
 
     m = pipeline.run_pipeline(spark, t1_paths(d), d,
                               sinks=["usage", "leads", "battle_counts"],
-                              count_rows=False, resume=True)
+                              resume=True)
     by = {s["partition"]: s for s in m["sinks"]}
     assert by["usage"]["skipped"] and by["battle_counts"]["skipped"]
     assert not by["leads"]["skipped"]
@@ -57,6 +56,20 @@ def t1_paths(_d):
 def test_fresh_rerun_without_resume_overwrites(spark, out):
     d, _ = out
     m = pipeline.run_pipeline(spark, t1_paths(d), d, sinks=["usage"],
-                              count_rows=False, resume=False)
+                              resume=False)
     by = {s["partition"]: s for s in m["sinks"]}
     assert not by["usage"]["skipped"]
+
+
+def test_usage_ignores_a_previous_runs_usage_tagged(spark, t1, tmp_path):
+    # a previous run left usage_tagged at the default cutoffs; a fresh
+    # (resume=False) run with other cutoffs must derive usage from its
+    # own aggregation, not from that stale parquet
+    d = str(tmp_path)
+    pipeline.run_pipeline(spark, t1, d, sinks=["usage_tagged"])
+    cutoffs = [0, 1400, 1600, 1800]
+    pipeline.run_pipeline(spark, t1, d, sinks=["usage"], cutoffs=cutoffs,
+                          resume=False)
+    got = spark.read.parquet(os.path.join(d, "usage")) \
+        .select("cutoff").distinct().collect()
+    assert sorted(r.cutoff for r in got) == cutoffs

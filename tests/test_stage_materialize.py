@@ -23,8 +23,7 @@ def both(spark, t1, tmp_path_factory):
     outs = {}
     for mode in ("cache", "stage"):
         d = str(tmp_path_factory.mktemp(f"mat_{mode}"))
-        pipeline.run_pipeline(spark, t1, d, count_rows=False,
-                              materialize=mode)
+        pipeline.run_pipeline(spark, t1, d, materialize=mode)
         outs[mode] = d
     return outs
 
