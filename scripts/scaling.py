@@ -538,7 +538,7 @@ Measured by `scripts/scaling.py {p.n_convs} {low} {high}`;
     if p.pairs:
         md += _pairs_section(p)
     # retained evidence sections (waste forensics, fixed-cost method,
-    # streaming micro-bench, headline config) live in a supplement file
+    # headline config) live in a supplement file
     # so protocol reruns don't erase them
     supp = os.path.join(ROOT, "scripts", "bench_supplement.md")
     if os.path.exists(supp):

@@ -13,7 +13,6 @@ Layout:
   operators/   parse (FSM), enrich, classify, aggregate, dedup, similarity
   plans/       end-to-end jobs (pipeline, reports)
   sources/     table loaders and routed sinks
-  streaming/   Structured Streaming variants
 """
 
 __version__ = "0.1.0"

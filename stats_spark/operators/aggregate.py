@@ -2,45 +2,48 @@
 
 Every aggregate is a commutative sum/max — Spark's partial+final hash
 aggregation replaces the reference's explicit update/combine split
-(stats.ts:214-242, 585-653) with zero code.  Group keys always lead
+(stats.ts:214-242, 585-653) with zero code.  Output keys always lead
 with (format, cutoff): format is the skewed dimension
 (logs/DESIGN.md:9-11), handled by AQE skew splitting plus the fact
 that species/key columns fan the hot keys out naturally.
 
-Input frames come from operators.enrich:
-  mons_w    (battle, side, mon) × cutoff, with weight/gxe/short flags
-  sides_w   (battle, side) × cutoff, with tags/classification
-  battles_w battle × cutoff, with per-side weights, leads, matchups
+Input frames come from operators.enrich and plans.pipeline:
+  mons_w    one row per (battle, side, mon), with gxe/short flags
+  sides_w   one row per (battle, side), with tags/classification
+  battles_w battle × cutoff rows, with per-side weights, leads, matchups
+
+mons_w and sides_w carry the WIDE cutoff shape of
+enrich.with_cutoff_weights: the format's four cutoffs as ``cutoff_0..3``
+and their erf weights as ``w_0..3`` columns, not ×4 rows.  Only the
+weight varies by cutoff, so their aggregates sum the four weight
+columns in one pass and unpivot the small grouped output back to a
+``cutoff`` row dimension (``_stacked``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from stats_spark.operators.enrich import N_CUTOFFS, WIDE_COLS
 from stats_spark.operators.parse import INVERSE_OUTCOMES
 
 GK = ["format", "cutoff"]  # global grouping dimensions
-
-N_CUTOFFS = 4  # matches enrich.N_CUTOFFS
 
 
 def not_short(col) -> F.Column:
     return F.when(~F.col("short"), col).otherwise(F.lit(0))
 
 
-def _is_wide(df: DataFrame) -> bool:
-    """True for the wide-cutoff shape (enrich.with_cutoff_weights):
-    cutoff_0..3/w_0..3 columns instead of exploded (cutoff, weight)
-    rows.  Aggregates accept either; the wide path is the pipeline's
-    (×4 fewer shuffle rows and hash-agg probes), the exploded path
-    serves streaming/parity callers."""
-    return "w_0" in df.columns
-
-
 def _cutoff_firsts():
     """Group-key carry for the per-format cutoff values (constant
     within a format, so first() is deterministic)."""
     return [F.first(f"cutoff_{i}").alias(f"cutoff_{i}")
+            for i in range(N_CUTOFFS)]
+
+
+def _per_cutoff(name: str, fn) -> list:
+    """``fn(w_i)`` aliased ``name_i`` for every cutoff i."""
+    return [fn(F.col(f"w_{i}")).alias(f"{name}_{i}")
             for i in range(N_CUTOFFS)]
 
 
@@ -56,31 +59,6 @@ def _stacked(grouped: DataFrame, keys: list[str], cols: list[str],
     return grouped.select(
         *keys, F.expr(f"stack({N_CUTOFFS}, {rows}) AS ({names})"),
         *extra)
-
-
-def usage_by_species(mons_w: DataFrame) -> DataFrame:
-    """A3 usage counters per species — stats.ts:284-296, 359-372.
-
-    raw_*   every battle (even short) — the moveset denominator
-    usage_* short battles excluded; `real` = appeared on the field
-    win_*   winner side only
-    """
-    win = F.col("outcome") == 1
-    real = F.col("turns_out") > 0
-    return (mons_w.groupBy(*GK, "species").agg(
-        F.count("*").alias("raw_count"),
-        F.sum("weight").alias("raw_weight"),
-        F.sum(F.col("rating_valid").cast("int")).alias("saved_count"),
-        F.sum(F.when(F.col("rating_valid"), F.col("weight")).otherwise(0.0))
-            .alias("saved_weight"),
-        F.sum(not_short(F.lit(1))).alias("usage_raw"),
-        F.sum(not_short(real.cast("int"))).alias("usage_real"),
-        F.sum(not_short(F.col("weight"))).alias("usage_weighted"),
-        F.sum(not_short(win.cast("int"))).alias("win_raw"),
-        F.sum(not_short((win & real).cast("int"))).alias("win_real"),
-        F.sum(not_short(F.when(win, F.col("weight")).otherwise(0.0)))
-            .alias("win_weighted"),
-    ))
 
 
 def with_tag_dimension(df: DataFrame) -> DataFrame:
@@ -103,39 +81,13 @@ TAGGED_COLS = ["format", "cutoff", "tag", "species", "raw_count",
 
 def usage_by_species_tagged(mons_wt: DataFrame) -> DataFrame:
     """Per-(tag, species) usage counters.  Input: mons frame ⋈ side
-    tags → with_tag_dimension, in either cutoff shape (wide preferred —
-    only the weighted counters vary by cutoff, so the counts aggregate
-    once).  tag='total' reproduces usage_by_species column-for-column
-    (usage_from_tagged below extracts it), so the pipeline aggregates
-    the mons scan ONCE for the whole usage family."""
+    tags → with_tag_dimension.  Only the weighted counters vary by
+    cutoff, so the counts aggregate once.  tag='total' is
+    usage_by_species column-for-column (usage_from_tagged below
+    extracts it), so the pipeline aggregates the mons scan ONCE for the
+    whole usage family."""
     win = F.col("outcome") == 1
     real = F.col("turns_out") > 0
-    if not _is_wide(mons_wt):
-        return (mons_wt.groupBy(*GK, "tag", "species").agg(
-            F.count("*").alias("raw_count"),
-            F.sum("weight").alias("raw_weight"),
-            F.sum(F.col("rating_valid").cast("int")).alias("saved_count"),
-            F.sum(F.when(F.col("rating_valid"), F.col("weight"))
-                   .otherwise(0.0)).alias("saved_weight"),
-            F.sum(not_short(F.lit(1))).alias("usage_raw"),
-            F.sum(not_short(real.cast("int"))).alias("usage_real"),
-            F.sum(not_short(F.col("weight"))).alias("usage_weighted"),
-            F.sum(not_short(win.cast("int"))).alias("win_raw"),
-            F.sum(not_short((win & real).cast("int"))).alias("win_real"),
-            F.sum(not_short(F.when(win, F.col("weight")).otherwise(0.0)))
-                .alias("win_weighted"),
-        ).select(*TAGGED_COLS))
-    per_cut = []
-    for i in range(N_CUTOFFS):
-        w = F.col(f"w_{i}")
-        per_cut += [
-            F.sum(w).alias(f"raw_weight_{i}"),
-            F.sum(F.when(F.col("rating_valid"), w).otherwise(0.0))
-                .alias(f"saved_weight_{i}"),
-            F.sum(not_short(w)).alias(f"usage_weighted_{i}"),
-            F.sum(not_short(F.when(win, w).otherwise(0.0)))
-                .alias(f"win_weighted_{i}"),
-        ]
     g = mons_wt.groupBy("format", "tag", "species").agg(
         F.count("*").alias("raw_count"),
         F.sum(F.col("rating_valid").cast("int")).alias("saved_count"),
@@ -143,7 +95,13 @@ def usage_by_species_tagged(mons_wt: DataFrame) -> DataFrame:
         F.sum(not_short(real.cast("int"))).alias("usage_real"),
         F.sum(not_short(win.cast("int"))).alias("win_raw"),
         F.sum(not_short((win & real).cast("int"))).alias("win_real"),
-        *_cutoff_firsts(), *per_cut)
+        *_cutoff_firsts(),
+        *_per_cutoff("raw_weight", F.sum),
+        *_per_cutoff("saved_weight", lambda w: F.sum(
+            F.when(F.col("rating_valid"), w).otherwise(0.0))),
+        *_per_cutoff("usage_weighted", lambda w: F.sum(not_short(w))),
+        *_per_cutoff("win_weighted", lambda w: F.sum(
+            not_short(F.when(win, w).otherwise(0.0)))))
     return _stacked(
         g, ["format", "tag", "species"],
         ["raw_weight", "saved_weight", "usage_weighted", "win_weighted"],
@@ -155,6 +113,18 @@ def usage_by_species_tagged(mons_wt: DataFrame) -> DataFrame:
 USAGE_COLS = ["format", "cutoff", "species", "raw_count", "raw_weight",
               "saved_count", "saved_weight", "usage_raw", "usage_real",
               "usage_weighted", "win_raw", "win_real", "win_weighted"]
+
+
+def usage_by_species(mons_w: DataFrame) -> DataFrame:
+    """A3 usage counters per species — stats.ts:284-296, 359-372: the
+    'total' shard of the tagged aggregate, which is every mon row.
+
+    raw_*   every battle (even short) — the moveset denominator
+    usage_* short battles excluded; `real` = appeared on the field
+    win_*   winner side only
+    """
+    return usage_from_tagged(usage_by_species_tagged(
+        mons_w.withColumn("tag", F.lit("total"))))
 
 
 def usage_from_tagged(usage_tagged: DataFrame) -> DataFrame:
@@ -202,22 +172,11 @@ def moveset_maps(mons_w: DataFrame) -> DataFrame:
     (section, key) pairs as an array per mon, explode once, aggregate.
     Moveset counters include short battles (weights.m — stats.ts:299+)."""
     pairs = F.flatten(F.array(*[mk() for _, mk in _SECTIONS]))
-    if not _is_wide(mons_w):
-        return (mons_w
-                .select(*GK, "species", "weight",
-                        F.explode(pairs).alias("kv"))
-                .groupBy(*GK, "species", "kv.section", "kv.key")
-                .agg(F.sum("weight").alias("weight"),
-                     F.count("*").alias("raw")))
-    wcols = [f"w_{i}" for i in range(N_CUTOFFS)]
-    ccols = [f"cutoff_{i}" for i in range(N_CUTOFFS)]
     g = (mons_w
-         .select("format", "species", *wcols, *ccols,
+         .select("format", "species", *WIDE_COLS,
                  F.explode(pairs).alias("kv"))
          .groupBy("format", "species", "kv.section", "kv.key")
-         .agg(*_cutoff_firsts(),
-              *[F.sum(w).alias(f"weight_{i}")
-                for i, w in enumerate(wcols)],
+         .agg(*_cutoff_firsts(), *_per_cutoff("weight", F.sum),
               F.count("*").alias("raw")))
     return _stacked(g, ["format", "species", "section", "key"],
                     ["weight"], extra=["raw"]).select(
@@ -235,26 +194,13 @@ def teammates(sides_w: DataFrame) -> DataFrame:
         " transform(slice(team, 1, i), y -> "
         "  array(struct(y.species as a, x.species as b),"
         "        struct(x.species as a, y.species as b))))"))
-    if not _is_wide(sides_w):
-        return (sides_w
-                .filter(~F.col("short"))
-                .select(*GK, "weight",
-                        F.explode(F.flatten(pairs)).alias("p"))
-                .groupBy(*GK, F.col("p.a").alias("species"),
-                         F.col("p.b").alias("teammate"))
-                .agg(F.sum("weight").alias("weight"),
-                     F.count("*").alias("raw")))
-    wcols = [f"w_{i}" for i in range(N_CUTOFFS)]
-    ccols = [f"cutoff_{i}" for i in range(N_CUTOFFS)]
     g = (sides_w
          .filter(~F.col("short"))
-         .select("format", *wcols, *ccols,
+         .select("format", *WIDE_COLS,
                  F.explode(F.flatten(pairs)).alias("p"))
          .groupBy("format", F.col("p.a").alias("species"),
                   F.col("p.b").alias("teammate"))
-         .agg(*_cutoff_firsts(),
-              *[F.sum(w).alias(f"weight_{i}")
-                for i, w in enumerate(wcols)],
+         .agg(*_cutoff_firsts(), *_per_cutoff("weight", F.sum),
               F.count("*").alias("raw")))
     return _stacked(g, ["format", "species", "teammate"],
                     ["weight"], extra=["raw"]).select(
@@ -316,23 +262,13 @@ def metagame(sides_w: DataFrame) -> DataFrame:
     """A10 metagame tag weights.  The reference adds the side's weight
     once per team slot (updateStats iterates mons — stats.ts:284-296),
     so the effective weight is team_size × w."""
-    if not _is_wide(sides_w):
-        return (sides_w
-                .filter(~F.col("short"))
-                .select(*GK,
-                        (F.col("weight") * F.col("team_size")).alias("w"),
-                        F.explode("tags").alias("tag"))
-                .groupBy(*GK, "tag").agg(F.sum("w").alias("weight")))
     g = (sides_w
          .filter(~F.col("short"))
-         .select("format", "team_size",
-                 *[f"cutoff_{i}" for i in range(N_CUTOFFS)],
-                 *[f"w_{i}" for i in range(N_CUTOFFS)],
+         .select("format", "team_size", *WIDE_COLS,
                  F.explode("tags").alias("tag"))
          .groupBy("format", "tag")
-         .agg(*_cutoff_firsts(),
-              *[F.sum(F.col(f"w_{i}") * F.col("team_size"))
-                 .alias(f"weight_{i}") for i in range(N_CUTOFFS)]))
+         .agg(*_cutoff_firsts(), *_per_cutoff(
+             "weight", lambda w: F.sum(w * F.col("team_size")))))
     return _stacked(g, ["format", "tag"], ["weight"]).select(
         *GK, "tag", "weight")
 
@@ -350,19 +286,11 @@ def stalliness_samples(sides_w: DataFrame) -> DataFrame:
     Math.round semantics)."""
     binned = (F.floor(F.col("team_stalliness") / STALLINESS_GRID + 0.5)
               * STALLINESS_GRID)
-    if not _is_wide(sides_w):
-        return (sides_w
-                .filter(~F.col("short"))
-                .groupBy(*GK, binned.alias("stalliness"))
-                .agg(F.sum(F.col("weight") * F.col("team_size"))
-                      .alias("weight"),
-                     F.sum("team_size").alias("n")))
     g = (sides_w
          .filter(~F.col("short"))
          .groupBy("format", binned.alias("stalliness"))
-         .agg(*_cutoff_firsts(),
-              *[F.sum(F.col(f"w_{i}") * F.col("team_size"))
-                 .alias(f"weight_{i}") for i in range(N_CUTOFFS)],
+         .agg(*_cutoff_firsts(), *_per_cutoff(
+                 "weight", lambda w: F.sum(w * F.col("team_size"))),
               F.sum("team_size").alias("n")))
     return _stacked(g, ["format", "stalliness"], ["weight"],
                     extra=["n"]).select(
@@ -375,16 +303,10 @@ def unique_players(mons_w: DataFrame) -> DataFrame:
     r = OR(real), w = max(weight) over short-excluded rows;
     g = max(gxe) over ALL rows (stats.ts:318-327, 374-385)."""
     real = (F.col("turns_out") > 0).cast("int")
-    if not _is_wide(mons_w):
-        return (mons_w.groupBy(*GK, "species", "player").agg(
-            F.max(not_short(real)).alias("r"),
-            F.max(not_short(F.col("weight"))).alias("w"),
-            F.max("gxe").alias("g")))
     g = mons_w.groupBy("format", "species", "player").agg(
         F.max(not_short(real)).alias("r"),
         *_cutoff_firsts(),
-        *[F.max(not_short(F.col(f"w_{i}"))).alias(f"w_{i}")
-          for i in range(N_CUTOFFS)],
+        *_per_cutoff("w", lambda w: F.max(not_short(w))),
         F.max("gxe").alias("g"))
     return _stacked(g, ["format", "species", "player"], ["w"],
                     extra=["r", "g"]).select(

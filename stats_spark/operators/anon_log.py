@@ -442,8 +442,7 @@ def anonymize_logs(df, base_names: dict[str, str],
 
     def fn(batches):
         for pdf in batches:
-            # columnar .tolist() zip, not iterrows — same idiom as the
-            # streaming ingest (streaming/pipeline.py); the per-row JSON
+            # columnar .tolist() zip, not iterrows: the per-row JSON
             # parse + protocol rewrite dominates, but row materialization
             # shouldn't add per-cell Series overhead on top
             anons, leaks = [], []

@@ -44,15 +44,6 @@ def _cache_shingles(sh: DataFrame) -> DataFrame:
     return sh
 
 
-def unpersist_shingles() -> None:
-    """Release the shingle cache (callers that are done deduping)."""
-    while _SHINGLE_CACHE:
-        try:
-            _SHINGLE_CACHE.pop().unpersist()
-        except Exception:
-            pass
-
-
 def exact_dups(docs: DataFrame, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """Exact duplicate groups: digest → count + representative id."""

@@ -277,6 +277,8 @@ def explode_cutoffs(df: DataFrame,
 
 
 N_CUTOFFS = 4  # every reference cutoff set has exactly four entries
+# the columns with_cutoff_weights adds
+WIDE_COLS = [f"{c}_{i}" for c in ("cutoff", "w") for i in range(N_CUTOFFS)]
 
 
 def with_cutoff_weights(df: DataFrame,

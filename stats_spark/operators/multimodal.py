@@ -6,8 +6,8 @@ Arrow-batched ``mapInPandas`` stages.  The actual codec work is STUBBED
 (no image/audio libraries in this container): ``decode_stub`` produces
 a deterministic fake "decoded" tensor summary so the Spark-side
 contract — schema, batch shape, partitioning, UDF signature — is real
-and tested end-to-end.  Swapping in PIL/ffmpeg later only changes the
-function body marked NotImplementedError.
+and tested end-to-end.  Swapping in PIL/ffmpeg later only changes
+``decode_stub``.
 """
 
 from __future__ import annotations
@@ -69,11 +69,6 @@ def ensure_media_parquet(path: str, n: int = 64, seed: int = 42) -> str:
         pq.write_table(table, tmp)
         os.replace(tmp, path)
     return path
-
-
-def real_decode(payload: bytes, kind: str):
-    """The place a real codec goes (PIL / soundfile / pyav)."""
-    raise NotImplementedError("media codecs not available in this image")
 
 
 def decode_stub(payload: bytes) -> np.ndarray:

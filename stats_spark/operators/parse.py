@@ -48,13 +48,6 @@ POKE1_FODDERED = 10
 POKE2_FODDERED = 11
 UNKNOWN = 12
 
-OUTCOME_NAMES = [
-    "POKE1_KOED", "POKE2_KOED", "DOUBLE_DOWN", "POKE1_SWITCHED_OUT",
-    "POKE2_SWITCHED_OUT", "DOUBLE_SWITCH", "POKE1_FORCED_OUT",
-    "POKE2_FORCED_OUT", "POKE1_UTURN_KOED", "POKE2_UTURN_KOED",
-    "POKE1_FODDERED", "POKE2_FODDERED", "UNKNOWN",
-]
-
 # Lookup table for outcomes if poke1/poke2 exchanged — stats.ts:474-483
 INVERSE_OUTCOMES = [
     POKE2_KOED, POKE1_KOED, DOUBLE_DOWN,

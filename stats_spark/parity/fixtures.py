@@ -76,7 +76,8 @@ def _f(v):
 
 
 def formats() -> list[str]:
-    return sorted(os.listdir(LOGS))
+    """The fixture formats; none where the reference is absent."""
+    return sorted(os.listdir(LOGS)) if os.path.isdir(LOGS) else []
 
 
 def to_spark(spark, fmt: str):

@@ -39,8 +39,7 @@ def build_format_frames(spark, fmt: str) -> dict:
             .select("*", F.col("mon.species").alias("species"),
                     F.col("mon.turns_out").alias("turns_out"))
             .drop("mon"))
-    mons_w = enrich.with_weight(enrich.explode_cutoffs(mons, CUTOFFS))
-    usage = agg.usage_by_species(mons_w)
+    usage = agg.usage_by_species(enrich.with_cutoff_weights(mons, CUTOFFS))
     totals = agg.usage_totals(usage)
 
     bw = battles_weighted(battles.filter("error IS NULL"), CUTOFFS,
@@ -254,8 +253,9 @@ def add_detailed_frames(spark, fmt: str, frames: dict) -> dict:
                               F.sum(F.col("rating_valid").cast("int"))
                                .alias("saved_count")))
 
-    frames["d_teammates"] = agg.teammates(
-        sides_w.withColumn("team_size", F.size("team")))
+    # the production aggregates read the wide cutoff shape
+    sides_wide = enrich.with_cutoff_weights(sides, CUTOFFS)
+    frames["d_teammates"] = agg.teammates(sides_wide)
     # the reference's 'empty' teammate is an order-dependent OVERWRITE,
     # not a sum: updateTeammates receives a FRESH {} for empty mons
     # (stats.ts:299-300), so pokemon[b].teammates['empty'] ends at the
@@ -286,9 +286,10 @@ def add_detailed_frames(spark, fmt: str, frames: dict) -> dict:
         .select("format").distinct().collect()}
     bw = battles_weighted(battles, CUTOFFS, non_singles=ns, non_6v6=n6)
     frames["d_encounters"] = agg.encounters(bw)
-    frames["d_unique"] = agg.unique_players(mons_w.select(
-        "format", "cutoff", "species", "player", "turns_out", "short",
-        "weight", "gxe"))
+    frames["d_unique"] = agg.unique_players(mons.join(
+        sides_wide.select("conv_id", "side", "short", "gxe",
+                          *enrich.WIDE_COLS),
+        ["conv_id", "side"]))
     frames["d_viability"] = agg.viability(frames["d_unique"])
     return frames
 

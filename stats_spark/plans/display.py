@@ -26,9 +26,6 @@ from collections import defaultdict
 def _round(v: float, p: float = 1e4) -> float:
     return round(v * p) / p
 
-MOVESET_KEYS = ["abilities", "items", "spreads", "moves", "tera_types",
-                "happinesses", "stats"]
-
 
 def build_display(frames: dict, top_keys: int = 50) -> dict:
     """Assembles display documents keyed by (format, cutoff).

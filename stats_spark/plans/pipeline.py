@@ -30,7 +30,6 @@ from stats_spark.datagen import dims
 from stats_spark.operators import aggregate as agg
 from stats_spark.operators import enrich
 from stats_spark.operators.parse import parse_battles
-from stats_spark.functions.weights import weighting_expr  # noqa: F401 (parity/streaming callers import via this module)
 from stats_spark.sources import tables
 
 
@@ -192,14 +191,12 @@ STAGED = ("mons", "side_class", "battles_w")
 
 # the columns each frame's consumers read — the enrichment and the
 # weighted frames are ~45 columns wide
-_WX = ([f"cutoff_{i}" for i in range(enrich.N_CUTOFFS)]
-       + [f"w_{i}" for i in range(enrich.N_CUTOFFS)])
 MONS_W_COLS = ["format", "species", "player", "rating_valid", "short",
                "outcome", "turns_out", "gxe", "ability", "item",
                "tera_type", "happiness", "spread", "stats_str", "moves",
-               "tags", *_WX]
+               "tags", *enrich.WIDE_COLS]
 SIDES_W_COLS = ["conv_id", "format", "side", "short", "team", "team_size",
-                "tags", "team_stalliness", *_WX]
+                "tags", "team_stalliness", *enrich.WIDE_COLS]
 BW_COLS = ["conv_id", "format", "cutoff", "short", "singles",
            "leads_ok", "lead_p1", "lead_p2", "w_p1", "w_p2", "matchups"]
 
@@ -264,9 +261,9 @@ def _intermediates(pool, spark: SparkSession, battles: DataFrame, cutoffs,
           .withColumn("format", enrich.canonical_format_map_col()))
     # battles is compact on disk (a 150k-conversation checkpoint is a
     # few dozen MB) so the scan yields only 1-2 input partitions — but
-    # each row fans out ×48 downstream (2 sides × 6 mons × 4 cutoffs).
-    # Re-spread by bytes-cheap shuffle so every later stage
-    # parallelizes.  ×4 granularity: the pandas-UDF enrichment inherits
+    # each row fans out ×12 downstream (2 sides × 6 mons).  Re-spread
+    # by bytes-cheap shuffle so every later stage parallelizes.  ×4
+    # granularity: the enrichment (JVM expressions only) inherits
     # this count; at ×2 it ran exactly 2 waves with a 40 s max / 78 s
     # mean-of-8 task spread (event-log audit), wasting ~a straggler tail
     # per wave.
@@ -357,7 +354,7 @@ def build_frames(spark: SparkSession, battles: DataFrame,
     The schedule is the one run_pipeline uses: the intermediates go
     live on a pool of four (``_intermediates``), and build_frames waits
     for all of them before building the requested plans over them.
-    ``mons`` (the pruned enrichment, the CPU-heavy pandas-UDF stage) is
+    ``mons`` (the pruned enrichment, the CPU-heavy stage) is
     read only by a mons_w or sides_w sink, and held only when a mons_w
     sink is requested — mons_w and side_class both read it.  Plan
     building is driver time with no Spark job running (thousands of
@@ -377,7 +374,7 @@ def build_frames(spark: SparkSession, battles: DataFrame,
     cluster-scale path: cached blocks live on specific executors, and
     11 concurrent sink jobs racing over 8+ executors schedule tasks
     non-local to the blocks, stalling on remote block fetch or
-    recompute of the pandas-UDF enrichment lineage.  Parquet staging
+    recompute of the enrichment lineage.  Parquet staging
     makes the expensive enrichment run exactly once regardless of
     topology — the same reason the reference checkpoints its
     per-format intermediates to disk (logs/src/checkpoints.ts) rather

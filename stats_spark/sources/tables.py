@@ -53,7 +53,10 @@ def write_lineage(spark: SparkSession, out_dir: str, job: str,
     Written directly with pyarrow from the driver — the ledger is a
     handful of rows per commit, and submitting a Spark job per sink
     commit serializes the job pipeline (measured as an Amdahl drag on
-    scaling).  One uniquely-named file per commit keeps appends atomic."""
+    scaling).  One uniquely-named file per commit, written under a
+    ``_``-prefixed name and renamed into place, keeps appends atomic: a
+    writer killed mid-file leaves only a ``_`` file, which parquet
+    readers skip, so earlier commits still read back."""
     import uuid
     from datetime import datetime, timezone
 
@@ -69,8 +72,10 @@ def write_lineage(spark: SparkSession, out_dir: str, job: str,
         pa.field(f.name, pa.timestamp("us")) if pa.types.is_timestamp(f.type)
         else f for f in table.schema
     ])
-    pq.write_table(table.cast(schema),
-                   os.path.join(path, f"commit-{uuid.uuid4().hex}.parquet"))
+    name = f"commit-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f"_{name}")
+    pq.write_table(table.cast(schema), tmp)
+    os.replace(tmp, os.path.join(path, name))
     # _SUCCESS marker so plain-parquet readers treat the dir as a table
     open(os.path.join(path, "_SUCCESS"), "a").close()
     return path

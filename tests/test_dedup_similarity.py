@@ -248,11 +248,3 @@ def test_multimodal_features(spark):
     kinds = media.filter("kind = 'video'").count()
     assert plan.select("media_id").distinct().count() == kinds
 
-
-def test_streaming_counts(spark, t1):
-    from stats_spark.streaming import pipeline as SP
-    stream = SP.read_transcript_stream(spark, t1)
-    q = SP.run_available_now(SP.stream_usage_raw(stream), "usage_stream")
-    out = spark.sql("SELECT sum(n_convs) AS n FROM usage_stream").collect()
-    assert out[0].n == 60
-    q.stop()

@@ -6,6 +6,7 @@ import math
 
 import pytest
 
+from stats_spark.operators import aggregate as agg
 from stats_spark.plans import pipeline
 from stats_spark.sources import tables
 
@@ -47,14 +48,19 @@ def approx_map_equal(spark_map, oracle_map, what):
 
 
 def test_usage(frames, gold):
-    pdf = frames["usage"].toPandas()
     cols = ["raw_count", "raw_weight", "saved_count", "saved_weight",
             "usage_raw", "usage_real", "usage_weighted",
             "win_raw", "win_real", "win_weighted"]
-    got = {(r.format, r.cutoff, r.species): tuple(getattr(r, c) for c in cols)
-           for r in pdf.itertuples()}
     want = {k: tuple(v.get(c, 0) for c in cols) for k, v in gold.usage.items()}
-    approx_map_equal(got, want, "usage")
+    # the pipeline's usage sink, and usage_by_species (the entry point
+    # the parity harness calls) over the same weighted mons frame
+    for what, df in (("usage", frames["usage"]),
+                     ("usage_by_species",
+                      agg.usage_by_species(frames["_mons_w"]))):
+        got = {(r.format, r.cutoff, r.species):
+               tuple(getattr(r, c) for c in cols)
+               for r in df.toPandas().itertuples()}
+        approx_map_equal(got, want, what)
 
 
 def test_usage_tagged(frames, gold):

@@ -73,3 +73,38 @@ def test_usage_ignores_a_previous_runs_usage_tagged(spark, t1, tmp_path):
     got = spark.read.parquet(os.path.join(d, "usage")) \
         .select("cutoff").distinct().collect()
     assert sorted(r.cutoff for r in got) == cutoffs
+
+
+def test_torn_ledger_commit_keeps_earlier_commits(spark, tmp_path,
+                                                  monkeypatch):
+    # a writer killed halfway through a ledger commit must leave the
+    # earlier commits readable, so later resumes of the same out_dir work
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stats_spark.sources import tables
+
+    d = str(tmp_path)
+    for sink in ("leads", "usage"):
+        os.makedirs(os.path.join(d, sink))
+        open(os.path.join(d, sink, "_SUCCESS"), "w").close()
+
+    def commit(sink):
+        tables.write_lineage(spark, d, "stats_pipeline", [dict(
+            partition=sink, path=os.path.join(d, sink), rows=1)])
+
+    commit("leads")
+    write_table = pq.write_table
+
+    def torn(table, where, **kw):
+        buf = pa.BufferOutputStream()
+        write_table(table, buf, **kw)
+        data = buf.getvalue().to_pybytes()
+        with open(where, "wb") as f:
+            f.write(data[:len(data) // 2])
+        raise OSError("writer killed mid-file")
+
+    monkeypatch.setattr(pq, "write_table", torn)
+    with pytest.raises(OSError):
+        commit("usage")
+    assert pipeline.completed_sinks(spark, d) == {"leads"}
