@@ -693,10 +693,11 @@ def tr_tier_update(spark, sf_dir):
 def tr_binary_db(spark, sf_dir):
     """S8 fixed-width binary battle rows (Binary.Log gen-1 layout,
     stats/BINARY.md:15-31, workflows/pkmn/db.ts): 77-byte ts/turns/
-    end-type/ratings/teams records, encoded entirely JVM-side and
-    returned as hex for the hash gate.  The corpus has no gen<=2
-    formats, so the layout is exercised over all parsed battles; the
-    byte offsets themselves are pinned by tests/test_binary_db.py."""
+    end-type/ratings/teams records (JVM header columns, one vectorized
+    mapInArrow pack), returned as hex for the hash gate.  The corpus
+    has no gen<=2 formats, so the layout is exercised over all parsed
+    battles; the byte offsets themselves are pinned by
+    tests/test_binary_db.py."""
     from stats_spark.operators import binary_db
     b = _battles(spark).filter("error IS NULL")
     return binary_db.encode_logs(b, gen=1).select("conv_id", "ts_ms",

@@ -19,16 +19,17 @@ Per-mon team encoding (`binary.ts:59-96`): gen 1 = species + 4 moves
 fields are little-endian (the reference is native-endian;
 `binary.ts:14-18` — every platform this runs on is LE).
 
-Physical strategy — the encoder is a PURE COLUMN EXPRESSION: per-slot
-`element_at` field extraction, literal-map lookups (species/move/item
-index maps are tiny — `Lookup` in `@pkmn/engine` is the reference's
-equivalent side table), and byte-wise `lpad(hex(shiftright(x,8i) &
-255))` concatenation, so the whole row encodes inside whole-stage
-codegen with no Python in the path.  `unhex` materializes the binary
-row.  The sink range-partitions on the timestamp key and sorts within
-partitions, so the part files concatenate (in partition order) into
-one globally ts-sorted `.db` stream — the distributed analog of
-`db.ts`'s sorted-buffer merge (`db.ts:70-77`).
+Physical strategy — one vectorized encoder: the fields with numeric or
+temporal semantics (the tz-independent instant, HALF_UP rating
+rounding, winner side, end type) are JVM columns, and one
+``mapInArrow`` pass packs the header with numpy and the two teams with
+`_team_blocks`, the module's single `Team.encode` (it also writes
+`teams.db`).  The id→index maps are tiny — `Lookup` in `@pkmn/engine`
+is the reference's equivalent side table.  The sink range-partitions
+on the timestamp key and sorts within partitions, so the part files
+concatenate (in partition order) into one globally ts-sorted `.db`
+stream — the distributed analog of `db.ts`'s sorted-buffer merge
+(`db.ts:70-77`).
 
 Two disclosed divergences from the reference, both cited:
   * `binary.ts`'s `Write.u8` drops its value argument
@@ -88,7 +89,7 @@ def lookups() -> dict[str, dict[str, int]]:
 
 
 # ---------------------------------------------------------------------
-# hex-expression builders (all JVM-side)
+# the encoder
 
 def wall_clock_ms(t: F.Column, *, ntz: bool = False) -> F.Column:
     """Epoch milliseconds of the battle timestamp, independent of the
@@ -109,102 +110,85 @@ def wall_clock_ms(t: F.Column, *, ntz: bool = False) -> F.Column:
     return secs * 1000 + F.date_format(t, "SSS").cast("long")
 
 
-def _lookup(mapping: dict, default=0):
-    """id→index lookup as a CASE chain.  NOT a map literal: Catalyst
-    does not constant-fold CreateMap, so `element_at(map(...), key)`
-    rebuilds the whole MapData per row per site — measured ~60 µs per
-    lookup vs ~25 µs for the compiled CASE at bench scale (the encode
-    was lookup-bound, 2.5× end-to-end)."""
-    def look(key: F.Column) -> F.Column:
-        c = None
-        for k, v in sorted(mapping.items()):
-            c = F.when(key == k, v) if c is None else c.when(key == k, v)
-        return c.otherwise(F.lit(default))
-    return look
+def _team_blocks(col, gen: int, lk: dict) -> "np.ndarray":
+    """`Team.encode` (binary.ts:59-96) over an Arrow
+    ``list<struct<species, [item], moves>>`` column → an
+    ``(n, 6·Sizes[gen])`` uint8 array, one team block per row.
 
+    Vectorized: Arrow ``index_in`` resolves the id→index lookups at C
+    speed and numpy scatters the slot bytes — no per-row Python and no
+    ``to_pylist`` of the nested teams (the pylist conversion alone
+    measured ~7× the rest of the encode at bench scale).  Null or
+    unknown ids encode as 0; a null team is all zeros, a null mon a
+    zero slot; mons past the 6th and moves past the 4th are dropped.
+    Gen 2 adds the item byte ('nothing' = no item) and collapses every
+    ``hiddenpower<type>`` move to the base move, with the first typed
+    one's type in the trailing byte (unknown type = Normal = 0)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-def _u_le_hex(col: F.Column, n_bytes: int) -> F.Column:
-    """Little-endian unsigned int → 2·n hex chars.  ONE hex() of the
-    whole value, byte-swapped by slicing the padded hex string — not
-    one hex()/lpad() chain per byte: the per-byte form costs ~10 string
-    allocations per byte per row and measured ~10× slower at bench
-    scale (string-op count dominates this encoder, not the lookups)."""
-    v = col.cast("long")
-    if n_bytes < 8:
-        v = v.bitwiseAND(F.lit((1 << (8 * n_bytes)) - 1))
-    h = F.lpad(F.lower(F.hex(v)), 2 * n_bytes, "0")
-    if n_bytes == 1:
-        return h
-    return F.concat(*[F.substring(h, 2 * (n_bytes - 1 - i) + 1, 2)
-                      for i in range(n_bytes)])
+    S = SIZES[gen]
+    n = len(col)
+    out = np.zeros((n, 6 * S), np.uint8)
 
+    def idx(strings, names) -> "np.ndarray":
+        # 1-based table position (the lookups' ids); absent, unknown
+        # or null -> 0
+        ix = pc.index_in(strings, value_set=pa.array(names, pa.string()))
+        return (pc.fill_null(ix, -1).to_numpy(zero_copy_only=False)
+                .astype(np.int64) + 1)
 
-def _zero_hex(n_bytes: int) -> F.Column:
-    return F.lit("00" * n_bytes)
+    def lengths(lists) -> "np.ndarray":
+        return (pc.fill_null(pc.list_value_length(lists), 0)
+                .to_numpy(zero_copy_only=False).astype(np.int64))
 
+    def by_index(mapping: dict) -> list:
+        return sorted(mapping, key=mapping.get)
 
-def _rating_hex(rpr: F.Column, rprd: F.Column) -> F.Column:
-    """binary.ts:175-182 — 3 bytes (u16 rpr + u8 rprd) when a rating
-    exists, else zeros.  rprd is masked to a byte (Buffer.writeUInt8
-    range)."""
-    return F.when(
-        rpr.isNotNull(),
-        F.concat(_u_le_hex(F.round(rpr), 2),
-                 _u_le_hex(F.round(rprd).cast("long")
-                           .bitwiseAND(F.lit(255)), 1)),
-    ).otherwise(_zero_hex(3))
+    counts = lengths(col)
+    mons = col.flatten()              # struct per mon, team order
+    total = len(mons)
+    if total == 0:
+        return out
+    starts = np.cumsum(counts) - counts
+    row_of = np.repeat(np.arange(n), counts)
+    slot = np.arange(total) - np.repeat(starts, counts)
+    keep = slot < 6
+    row, base = row_of[keep], slot[keep] * S
+    # struct_field carries a null mon's null into every field
+    out[row, base] = idx(pc.struct_field(mons, "species"),
+                         by_index(lk["species"]))[keep]
 
-
-def _hp_type_num(mon) -> F.Column:
-    """Gen-2 trailing type byte: the hidden-power type carried by any
-    hiddenpower<type> move, else Normal (= 0)."""
-    hp = F.filter(mon.getField("moves"),
-                  lambda m: m.startswith("hiddenpower") & (m != "hiddenpower"))
-    t = F.substring(F.try_element_at(hp, F.lit(1)), len("hiddenpower") + 1, 99)
-    return F.when(F.size(hp) > 0, _lookup(TYPE_NUM)(t)) \
-            .otherwise(F.lit(0)).cast("long")
-
-
-def _mon_hex_fn(maps: dict, gen: int):
-    """Per-element encoder used inside the team `transform` — each CASE
-    lookup appears ONCE in the expression tree (shared by every slot /
-    move via the lambda) instead of once per site, so plan size stays
-    linear in the dim size rather than slots × dims (per-site inlining
-    made analysis + codegen the dominant cost on small inputs).  The
-    slot's bytes pack big-endian into ONE long, hex'd once (5 or 7
-    bytes fit a long) — stream order sp[,item],mv1..4[,hptype]."""
-    def fn(mon: F.Column) -> F.Column:
-        mv_in = mon.getField("moves")
-        if gen >= 2:
-            # gen-2 hidden power collapses to the base move id; the
-            # type rides in the trailing type byte (binary.ts:84-91)
-            mv_in = F.transform(
-                mv_in, lambda m: F.when(m.startswith("hiddenpower"),
-                                        F.lit("hiddenpower")).otherwise(m))
-        mv_ids = F.transform(mv_in, lambda m: maps["moves"](m))
-        parts = [maps["species"](mon.getField("species")).cast("long")]
-        if gen >= 2:
-            item = mon.getField("item")
-            parts.append(
-                F.when(item.isNull() | (item == "nothing"), F.lit(0))
-                 .otherwise(maps["items"](item)).cast("long"))
-        parts += [F.coalesce(F.try_element_at(mv_ids, F.lit(j + 1)),
-                             F.lit(0)).cast("long") for j in range(4)]
-        if gen >= 2:
-            parts.append(_hp_type_num(mon))
-        val = parts[0]
-        for p in parts[1:]:
-            val = F.shiftleft(val, 8) + p
-        return F.lpad(F.lower(F.hex(val)), 2 * SIZES[gen], "0")
-    return fn
-
-
-def _team_hex(team: F.Column, maps: dict, gen: int) -> F.Column:
-    """6-slot team → 2·6·Sizes[gen] hex chars; absent slots zero-fill
-    via rpad (binary.ts:107 — the first empty slot ends the team)."""
-    hexes = F.transform(team, _mon_hex_fn(maps, gen))
-    return F.rpad(F.coalesce(F.array_join(hexes, ""), F.lit("")),
-                  2 * 6 * SIZES[gen], "0")
+    mvl = pc.struct_field(mons, "moves")
+    mv = mvl.flatten()
+    mv_counts = lengths(mvl)
+    mv_start = np.cumsum(mv_counts) - mv_counts
+    if gen >= 2:
+        item = pc.struct_field(mons, "item")
+        it_idx = idx(item, by_index(lk["items"]))
+        it_idx[pc.fill_null(pc.equal(item, "nothing"), False)
+               .to_numpy(zero_copy_only=False)] = 0
+        out[row, base + 1] = it_idx[keep]
+        hp = pc.fill_null(pc.starts_with(mv, "hiddenpower"), False)
+        typed = np.flatnonzero(   # null moves: hp is False
+            pc.and_kleene(hp, pc.not_equal(mv, "hiddenpower"))
+              .to_numpy(zero_copy_only=False))
+        mon_of = np.repeat(np.arange(total), mv_counts)[typed]
+        mon_ids, first = np.unique(mon_of, return_index=True)
+        hp_t = np.zeros(total, np.int64)
+        hp_t[mon_ids] = idx(     # HP_TYPES order is TYPE_NUM's
+            pc.utf8_slice_codeunits(mv.take(typed[first]),
+                                    len("hiddenpower")), HP_TYPES)
+        out[row, base + 6] = hp_t[keep]
+        mv = pc.if_else(hp, "hiddenpower", mv)
+    mv_idx = idx(mv, by_index(lk["moves"]))
+    mv0 = 1 if gen == 1 else 2
+    for j in range(4):
+        has = (mv_counts > j)[keep]
+        out[row[has], base[has] + mv0 + j] = \
+            mv_idx[(mv_start + j)[keep][has]]
+    return out
 
 
 def _end_type_expr(winner: F.Column, end_type: F.Column | None) -> F.Column:
@@ -227,22 +211,16 @@ def encode_logs(battles: DataFrame, gen: int = 1) -> DataFrame:
     first; a tie (or missing winner) keeps p1 as 'winner'
     (binary.ts:160-161).
 
-    r06 physical split: everything with numeric/temporal SEMANTICS
-    stays a JVM column (the tz-instant ts_ms, HALF_UP rating rounding,
-    winner-side resolution, end-type CASE — compiled, and exactly the
-    r05 expressions), while the per-mon id→index lookups and byte
-    packing run VECTORIZED in ``mapInArrow`` (guide §4.2).  The r05
-    all-expression encoder evaluated the per-mon CASE-chain lookups
-    inside array ``transform`` lambdas, which Spark executes
-    INTERPRETED per element — measured ~9 s at bench scale for work
-    that is dict lookups + 77-byte packing (now <2 s).  Byte-identical
-    output, pinned by the tr_binary_db oracle hash and the round-trip
-    tests; null propagation matches concat semantics (a null
-    turns/ts/rprd-under-rated row yields null row_hex/row)."""
+    The numeric/temporal fields stay compiled JVM columns (the
+    tz-instant ts_ms, HALF_UP rating rounding, winner-side resolution,
+    the end-type CASE); one ``mapInArrow`` pass then packs the header
+    with numpy and both teams with `_team_blocks`.  Any null header
+    field (ts, turns, end type, or an rprd under a present rpr) yields
+    a null row_hex/row."""
     if gen not in SIZES:
         raise ValueError(f"Unsupported gen {gen}")  # binary.ts:156
     lk = lookups()
-    S = SIZES[gen]
+    size, N = row_size(gen), 6 * SIZES[gen]
     # the parse stage normalizes winner to p1/p2/tie (P2); raw frames
     # may still carry the player name (binary.ts:160 compares names)
     w_is_p2 = F.col("winner") == "p2"
@@ -262,8 +240,8 @@ def encode_logs(battles: DataFrame, gen: int = 1) -> DataFrame:
         return F.when(w_is_p2, p1).otherwise(p2)
 
     def rating_cols(rpr: F.Column, rprd: F.Column, tag: str):
-        # same rounding expressions as r05's _rating_hex: HALF_UP via
-        # F.round, rprd masked to a byte, gated on rpr presence
+        # HALF_UP via F.round, rprd masked to a byte, gated on rpr
+        # presence (binary.ts:175-182)
         return [
             F.when(rpr.isNotNull(), F.round(rpr).cast("long"))
              .alias(f"{tag}_rpr"),
@@ -284,58 +262,14 @@ def encode_logs(battles: DataFrame, gen: int = 1) -> DataFrame:
     )
     conv_t = battles.schema["conv_id"].dataType.simpleString()
 
-    def fn_gen1(batches):
-        """Fully vectorized gen-1 encoder: Arrow ``index_in`` resolves
-        the id→index lookups at C speed, numpy scatters the slot bytes,
-        and the hex column is ONE ``bytes.hex()`` over the whole batch
-        re-sliced by offsets — no per-row Python, no ``to_pylist`` of
-        the nested teams (measured: pylist conversion alone cost ~14 s
-        at bench scale, ~7× the rest of the encode)."""
+    def fn(batches):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        size = row_size(1)
-        sp_vals = pa.array(sorted(lk["species"], key=lk["species"].get))
-        mv_vals = pa.array(sorted(lk["moves"], key=lk["moves"].get))
-
-        def idx_of(strings: pa.Array, value_set: pa.Array) -> "np.ndarray":
-            # table position +1 (1-based ids), absent/unknown/null -> 0
-            ix = pc.index_in(strings, value_set=value_set)
-            return (pc.fill_null(pc.add(ix, 1), 0)
-                    .to_numpy(zero_copy_only=False).astype(np.uint8))
 
         def num(col: pa.Array) -> "np.ndarray":
             return (pc.fill_null(col, 0)
                     .to_numpy(zero_copy_only=False).astype(np.int64))
-
-        def team_scatter(mat: "np.ndarray", col: pa.Array, base: int):
-            counts = (pc.fill_null(pc.list_value_length(col), 0)
-                      .to_numpy(zero_copy_only=False).astype(np.int64))
-            mons = col.flatten()          # struct array, team order
-            total = len(mons)
-            if total == 0:
-                return
-            sp = idx_of(mons.field("species"), sp_vals)
-            mvl = mons.field("moves")
-            mv_counts = (pc.fill_null(pc.list_value_length(mvl), 0)
-                         .to_numpy(zero_copy_only=False).astype(np.int64))
-            mv_off = np.zeros(total + 1, np.int64)
-            np.cumsum(mv_counts, out=mv_off[1:])
-            mv_idx = idx_of(mvl.flatten(), mv_vals)
-            row_of = np.repeat(np.arange(len(counts)), counts)
-            slot = np.arange(total) - np.repeat(
-                np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-            keep = slot < 6               # r05 rpad truncation
-            boff = base + slot * SIZES[1]
-            mat[row_of[keep], boff[keep]] = sp[keep]
-            nmv = len(mv_idx)
-            if nmv == 0:
-                return
-            for j in range(4):
-                pos = mv_off[:-1] + j
-                has = (pos < mv_off[1:]) & keep
-                mat[row_of[has], boff[has] + 1 + j] = \
-                    mv_idx[np.minimum(pos, max(nmv - 1, 0))][has]
 
         for b in batches:
             n = b.num_rows
@@ -345,6 +279,8 @@ def encode_logs(battles: DataFrame, gen: int = 1) -> DataFrame:
             ts, turns, end = col["ts_ms"], col["turns"], col["end"]
             wr, wd = col["w_rpr"], col["w_rprd"]
             lr, ld = col["l_rpr"], col["l_rprd"]
+            # any null header field nulls the row (a present rpr with
+            # null rprd included)
             bad = pc.or_(pc.or_(pc.is_null(ts), pc.is_null(turns)),
                          pc.is_null(end))
             for r, d in ((wr, wd), (lr, ld)):
@@ -366,9 +302,11 @@ def encode_logs(battles: DataFrame, gen: int = 1) -> DataFrame:
                 dv = (num(d) & 0xFF).astype(np.uint8)
                 mat[present, o_r:o_r + 2] = rv[present]
                 mat[present, o_d] = dv[present]
-            team_scatter(mat, col["w_team"], 17)
-            team_scatter(mat, col["l_team"], 17 + 6 * SIZES[1])
+            mat[:, 17:17 + N] = _team_blocks(col["w_team"], gen, lk)
+            mat[:, 17 + N:] = _team_blocks(col["l_team"], gen, lk)
 
+            # the hex column is ONE bytes.hex() over the whole batch,
+            # re-sliced by offsets
             data = mat.tobytes()
             hex_all = data.hex().encode("ascii")
             validity = None
@@ -392,82 +330,8 @@ def encode_logs(battles: DataFrame, gen: int = 1) -> DataFrame:
                 [b.column(0), ts, hex_arr, row_arr],
                 ["conv_id", "ts_ms", "row_hex", "row"])
 
-    def fn(batches):
-        import pyarrow as pa
-        sp_m, mv_m, it_m = lk["species"], lk["moves"], lk["items"]
-        HP = len("hiddenpower")
-
-        def mon_bytes(m: dict) -> bytes:
-            out = bytearray(S)
-            if m is None:  # null slot encodes as zero bytes (r05 CASE)
-                return bytes(out)
-            out[0] = sp_m.get(m.get("species"), 0)
-            moves = m.get("moves") or []
-            if gen >= 2:
-                item = m.get("item")
-                out[1] = (0 if item is None or item == "nothing"
-                          else it_m.get(item, 0))
-                hp_t = 0
-                for mv in moves:
-                    if mv.startswith("hiddenpower") and mv != "hiddenpower":
-                        hp_t = TYPE_NUM.get(mv[HP:], 0)
-                        break
-                out[6] = hp_t
-                mv0 = 2
-                moves = ["hiddenpower" if mv.startswith("hiddenpower")
-                         else mv for mv in moves]
-            else:
-                mv0 = 1
-            for j, mv in enumerate(moves[:4]):
-                out[mv0 + j] = mv_m.get(mv, 0)
-            return bytes(out)
-
-        def team_bytes(team) -> bytes:
-            if not team:
-                return b"\x00" * (6 * S)
-            enc = b"".join(mon_bytes(m) for m in team)
-            return enc.ljust(6 * S, b"\x00")[:6 * S]
-
-        for b in batches:
-            cols = {n: b.column(i).to_pylist()
-                    for i, n in enumerate(b.schema.names)}
-            n = b.num_rows
-            out_hex: list = [None] * n
-            out_row: list = [None] * n
-            for i in range(n):
-                ts, turns, end = (cols["ts_ms"][i], cols["turns"][i],
-                                  cols["end"][i])
-                wr, wd = cols["w_rpr"][i], cols["w_rprd"][i]
-                lr, ld = cols["l_rpr"][i], cols["l_rprd"][i]
-                # concat null semantics: any null header field nulls
-                # the row (a present rpr with null rprd included)
-                if (ts is None or turns is None or end is None
-                        or (wr is not None and wd is None)
-                        or (lr is not None and ld is None)):
-                    continue
-                row = (ts.to_bytes(8, "little")
-                       + (turns & 0xFFFF).to_bytes(2, "little")
-                       + bytes([end & 0xFF])
-                       + ((wr & 0xFFFF).to_bytes(2, "little")
-                          + bytes([wd]) if wr is not None
-                          else b"\x00\x00\x00")
-                       + ((lr & 0xFFFF).to_bytes(2, "little")
-                          + bytes([ld]) if lr is not None
-                          else b"\x00\x00\x00")
-                       + team_bytes(cols["w_team"][i])
-                       + team_bytes(cols["l_team"][i]))
-                out_row[i] = row
-                out_hex[i] = row.hex()
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0),
-                 b.column(b.schema.get_field_index("ts_ms")),
-                 pa.array(out_hex, type=pa.string()),
-                 pa.array(out_row, type=pa.binary())],
-                ["conv_id", "ts_ms", "row_hex", "row"])
-
     return pre.mapInArrow(
-        fn_gen1 if gen == 1 else fn,
-        f"conv_id {conv_t}, ts_ms long, row_hex string, row binary")
+        fn, f"conv_id {conv_t}, ts_ms long, row_hex string, row binary")
 
 
 # ---------------------------------------------------------------------
@@ -628,7 +492,7 @@ def scan_db(spark, db_dir: str, gen: int = 1):
 def _u_le(col: F.Column, off: int, n: int) -> F.Column:
     """Little-endian unsigned int read from a binary column: byte-wise
     substring → hex → conv, composed with shifts (whole-stage codegen;
-    the JVM-side inverse of `_u_le_hex`)."""
+    reads the header fields that `encode_logs` packs)."""
     def byte(i: int) -> F.Column:
         return F.conv(F.hex(F.substring(col, off + 1 + i, 1)), 16, 10) \
                 .cast("long")
@@ -954,18 +818,17 @@ def write_teams_db(top: DataFrame, path: str, gen: int = 1,
     """`teams.db` sink: each of the top teams re-encoded as the
     6·Sizes[gen] fixed-width team block (Team.encode;
     tools/teams:86-99) in score order.  The output is ≤ num·N bytes
-    (num defaults to 10,000 → ≤ 420 KB), so a driver-side toLocalIterator
-    write is the right physical plan even when the input `.db` is 100 TB
-    — the top-k upstream already reduced it.  Mirrors the reference's
+    (num defaults to 10,000 → ≤ 420 KB), so collecting the teams to the
+    driver as Arrow and encoding them there with `_team_blocks` is the
+    right physical plan even when the input `.db` is 100 TB — the top-k
+    upstream already reduced it.  Mirrors the reference's
     exit-with-error when fewer than ``num`` unique teams exist
     (tools/teams:101-104).  Returns rows written."""
-    maps = {k: _lookup(v) for k, v in lookups().items()}
-    hexed = top.select(_team_hex(F.col("team"), maps, gen).alias("h"))
-    n = 0
+    teams = top.select("team").toArrow().column("team").combine_chunks()
+    blocks = _team_blocks(teams, gen, lookups())
     with open(path, "wb") as f:
-        for r in hexed.toLocalIterator():
-            f.write(bytes.fromhex(r.h))
-            n += 1
+        f.write(blocks.tobytes())
+    n = len(blocks)
     if n < num:
         raise ValueError(
             f"Requested {num} teams but only {n} unique teams")
@@ -1003,11 +866,13 @@ def sizes_from_db(spark, db_dir: str, gen: int = 1,
                 .select(F.coalesce("n", F.lit(0)).alias("n")).collect())
         return sorted(r.n for r in rows)
 
-    out = {"moves": [ptile(counts(st["move_species"]), i / 100)
-                     for i in range(101)]}
+    tables = {"moves": "move_species"}
     if gen >= 2:
-        out["items"] = [ptile(counts(st["item_species"]), i / 100)
-                        for i in range(101)]
+        tables["items"] = "item_species"
+    out = {}
+    for key, frame in tables.items():
+        c = counts(st[frame])  # one Spark count per table
+        out[key] = [ptile(c, i / 100) for i in range(101)]
     return out
 
 

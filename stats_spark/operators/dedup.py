@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from stats_spark.functions import text as T
+from stats_spark.operators.similarity import _respread
 
 HASH_BITS = 60
 
@@ -53,19 +54,6 @@ def exact_dups(docs: DataFrame, text_col: str = "text",
             .agg(F.count("*").alias("n_docs"),
                  F.min(id_col).alias("keep_id"))
             .filter(F.col("n_docs") > 1))
-
-
-def _respread(df: DataFrame) -> DataFrame:
-    """Re-spread a compact scan up to cluster parallelism BEFORE the
-    CPU-heavy tokenize/shingle/hash projections — an exchange above
-    them would leave that work serialized on the 1-2 scan partitions a
-    small parquet yields under the 8 MB local splits.  At 100 TB the
-    scan already exceeds parallelism × maxPartitionBytes and this is a
-    no-op."""
-    par = df.sparkSession.sparkContext.defaultParallelism * 2
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    return df
 
 
 def doc_shingles(docs: DataFrame, text_col: str = "text",

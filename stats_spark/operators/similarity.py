@@ -26,10 +26,10 @@ def dot(a, b):
 
 def _respread(df: DataFrame) -> DataFrame:
     """Re-spread a compact scan up to cluster parallelism BEFORE the
-    CPU-heavy norm/plane-projection work: a small embeddings parquet
-    packs into 1-2 scan splits under the 8 MB local split size, and
-    every pre-shuffle projection (norms, per-band dot products,
-    scoring) would otherwise run single-task.  At 100 TB the scan
+    CPU-heavy projections (norms, plane projections and scoring here;
+    tokenize/shingle/hash in `dedup`): a small parquet packs into 1-2
+    scan splits under the 8 MB local split size, and every pre-shuffle
+    projection would otherwise run single-task.  At 100 TB the scan
     exceeds parallelism × maxPartitionBytes and this is a no-op."""
     par = df.sparkSession.sparkContext.defaultParallelism * 2
     if df.rdd.getNumPartitions() < par:

@@ -427,7 +427,7 @@ def _parquet_rows(path: str) -> int:
                                    recursive=True))
 
 
-def completed_sinks(spark: SparkSession, out_dir: str,
+def completed_sinks(out_dir: str,
                     job: str = "stats_pipeline") -> set[str]:
     """Sinks the lineage ledger records as committed AND whose output
     still carries a _SUCCESS marker — the resume predicate
@@ -436,7 +436,7 @@ def completed_sinks(spark: SparkSession, out_dir: str,
     Read on the driver with pyarrow, the way tables.write_lineage
     writes it: the ledger is a few rows per commit, and reading it
     through Spark cost a job per run (~0.2 s warm, ~4 s as a JVM's
-    first read).  ``spark`` is unused; kept for the call sites."""
+    first read)."""
     import pyarrow.parquet as pq
 
     path = os.path.join(out_dir, "_lineage")
@@ -492,7 +492,7 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
                                       materialize)
     if date is not None:
         cutoffs = cutoff_map(date)
-    done = completed_sinks(spark, out_dir) if resume else set()
+    done = completed_sinks(out_dir) if resume else set()
 
     bpath = os.path.join(out_dir, "battles")
     if resume and os.path.exists(os.path.join(bpath, "_SUCCESS")):

@@ -24,10 +24,22 @@ def _load_bench():
 
 
 def _spawn(marker: str, seconds: float) -> subprocess.Popen:
-    # the marker rides in argv, so /proc/<pid>/cmdline contains it
-    return subprocess.Popen(
+    # the marker rides in argv, so /proc/<pid>/cmdline contains it --
+    # but the cmdline can still read empty for ~1 ms after Popen
+    # returns (measured on a Linux 6.18 VM), and the guard's single
+    # scan then misses the fake; wait until it is visible
+    p = subprocess.Popen(
         [sys.executable, "-c", f"import time; time.sleep({seconds})",
          marker])
+    deadline = time.time() + 10
+    while time.time() < deadline:
+        with open(f"/proc/{p.pid}/cmdline", "rb") as f:
+            if marker.encode() in f.read():
+                return p
+        time.sleep(0.01)
+    p.kill()
+    p.wait()
+    raise RuntimeError(f"fake process {marker!r} never became visible")
 
 
 def test_no_protocol_returns_immediately():

@@ -160,6 +160,47 @@ def test_gen2_layout_and_hidden_power(spark):
     assert row[mon2 + 1] == 0
 
 
+def _plain_moves(lk, n):
+    return [m for m in sorted(lk["moves"])
+            if not m.startswith("hiddenpower")][:n]
+
+
+def test_gen2_encoder_edge_cases(spark):
+    """Team.encode's gen-2 edge cases, against bytes built by hand:
+    unknown/null/'nothing' items, unknown species and moves encode 0;
+    a 5th move and a 7th mon are dropped; bare ``hiddenpower`` and
+    ``hiddenpower<unknown>`` leave the type byte at 0, and the first
+    typed hidden power wins; a null mon is a zero slot."""
+    lk = B.lookups()
+    sp, it = sorted(lk["species"]), sorted(lk["items"])
+    mv = _plain_moves(lk, 6)
+    S, M, I, T = lk["species"], lk["moves"], lk["items"], B.TYPE_NUM
+    hp = M["hiddenpower"]
+    p1 = _team(
+        dict(species=sp[0], item="notanitem",
+             moves=[mv[0], "notamove", "hiddenpower", mv[1], mv[2]]),
+        dict(species=sp[1], item=None,
+             moves=["hiddenpowerzz", "hiddenpowerfire"]),
+        dict(species=sp[2], item="nothing",
+             moves=[mv[3], "hiddenpowerice", "hiddenpowerfire"]),
+        dict(species=sp[3], item=it[1], moves=[]),
+        dict(species="notaspecies", item=it[2], moves=[mv[4]]),
+        dict(species=sp[5], item=it[3], moves=["hiddenpowerwater"]),
+        dict(species=sp[6], item=it[4], moves=[mv[5]]))
+    p2 = [None] + _team(dict(species=sp[1], moves=[mv[0]]))
+    df = _battles(spark, [_row("edge", 5, p1=p1, p2=p2)])
+    row = bytes(B.encode_logs(df, gen=2).collect()[0].row)
+    assert row[17:59] == bytes([
+        S[sp[0]], 0, M[mv[0]], 0, hp, M[mv[1]], 0,
+        S[sp[1]], 0, hp, hp, 0, 0, 0,
+        S[sp[2]], 0, M[mv[3]], hp, hp, 0, T["ice"],
+        S[sp[3]], I[it[1]], 0, 0, 0, 0, 0,
+        0, I[it[2]], M[mv[4]], 0, 0, 0, 0,
+        S[sp[5]], I[it[3]], hp, 0, 0, 0, T["water"]])
+    assert row[59:101] == bytes(7) + bytes(
+        [S[sp[1]], 0, M[mv[0]], 0, 0, 0, 0]) + bytes(28)
+
+
 def test_round_trip_decode(spark):
     df = _battles(spark, [_row("rt", 1717200000123)])
     enc = B.encode_logs(df, gen=1).collect()[0]
@@ -417,6 +458,37 @@ def test_teams_gen2_key_includes_item_and_hp_type(spark, tmp_path):
                for t in decoded for m in t)
 
 
+def test_write_teams_db_gen2_round_trip(spark, tmp_path):
+    """Several gen-2 teams through teams.db and back (Team.decode per
+    block, tools/teams:39-52), in frame order: items, a 'nothing' item
+    (decodes as no item), hiddenpower<type> re-attached from the type
+    byte, and an empty team as an all-zero block."""
+    lk = B.lookups()
+    sp, it = sorted(lk["species"]), sorted(lk["items"])
+    mv = _plain_moves(lk, 5)
+    teams = [
+        [dict(slot=1, species=sp[0], item=it[0],
+              moves=[mv[0], "hiddenpowerfire"]),
+         dict(slot=2, species=sp[1], item="nothing", moves=[mv[1]])],
+        [dict(slot=1, species=sp[2], item=it[1],
+              moves=["hiddenpowerice", mv[2], mv[3], mv[4]])],
+        [],
+    ]
+    top = spark.createDataFrame(
+        [(t,) for t in teams],
+        "team array<struct<slot:int,species:string,item:string,"
+        "moves:array<string>>>")
+    path = str(tmp_path / "teams2.db")
+    assert B.write_teams_db(top, path, gen=2, num=3) == 3
+    assert B.read_teams_db(path, gen=2) == [
+        [dict(species=sp[0], item=it[0], moves=[mv[0], "hiddenpowerfire"]),
+         dict(species=sp[1], item=None, moves=[mv[1]])],
+        [dict(species=sp[2], item=it[1],
+              moves=["hiddenpowerice", mv[2], mv[3], mv[4]])],
+        [],
+    ]
+
+
 def _py_sizes(db_path, gen, cutoff):
     """tools/stats:101-133 twin over the python stats twin."""
     import math
@@ -477,3 +549,33 @@ def test_encode_tz_independent_ntz(spark):
         spark.conf.set("spark.sql.session.timeZone", tz)
     assert ref == ny
     assert ref[0]["ts_ms"] == ts_ms
+
+
+def test_sizes_from_db_counts_each_table_once(spark, tmp_path):
+    """tools/stats `sizes` reads the percentile table off ONE count per
+    table (moves, and items at gen 2), not one Spark count per
+    percentile (101 per table)."""
+    lk = B.lookups()
+    sp, it = sorted(lk["species"]), sorted(lk["items"])
+    mv = _plain_moves(lk, 4)
+    rows = [_row(f"s{i}", 1000 + i,
+                 p1=_team(dict(species=sp[i % 3], item=it[i % 2],
+                               moves=[mv[i % 4], mv[(i + 1) % 4]]),
+                          dict(species=sp[3], item=it[2], moves=[mv[0]])))
+            for i in range(8)]
+    out = str(tmp_path / "sizes2")
+    B.write_db(B.encode_logs(_battles(spark, rows), gen=2), out, gen=2,
+               n_files=1)
+    db = str(tmp_path / "sizes2.db")
+    B.concat_db(out, db)
+    sc = spark.sparkContext
+    group = "test_sizes_from_db_counts_each_table_once"
+    sc.setJobGroup(group, "sizes_from_db")
+    try:
+        got = B.sizes_from_db(spark, out, gen=2, cutoff=1500)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) < 20, len(jobs)
+    assert got["moves"] == pytest.approx(_py_sizes(db, 2, 1500), rel=1e-12)
+    assert len(got["items"]) == 101

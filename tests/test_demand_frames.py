@@ -121,4 +121,4 @@ def test_enrichment_error_is_raised(spark, t1, bw_only, tmp_path,
     assert [str(e) for e in raised] == ["classify_sides failed"]
     enriched = {s for s in pipeline.SINKS
                 if pipeline.source(s) in ("mons_w", "sides_w")}
-    assert not enriched & pipeline.completed_sinks(spark, d)
+    assert not enriched & pipeline.completed_sinks(d)

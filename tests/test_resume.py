@@ -20,7 +20,7 @@ def out(spark, t1, tmp_path_factory):
 
 def test_first_run_commits_lineage(spark, out):
     d, m = out
-    done = pipeline.completed_sinks(spark, d)
+    done = pipeline.completed_sinks(d)
     assert {"usage", "leads", "battle_counts", "rejects"} <= done
     assert all(not s.get("skipped") for s in m["sinks"])
 
@@ -43,7 +43,7 @@ def test_resume_skips_completed(spark, out):
         assert os.path.getmtime(os.path.join(d, s, "_SUCCESS")) == t
     # the recomputed sink is back and committed
     assert os.path.exists(os.path.join(d, "leads", "_SUCCESS"))
-    assert "leads" in pipeline.completed_sinks(spark, d)
+    assert "leads" in pipeline.completed_sinks(d)
     # parse was NOT rerun: the battles checkpoint was reused
     assert m["parse_seconds"] == 0.0
 
@@ -107,4 +107,4 @@ def test_torn_ledger_commit_keeps_earlier_commits(spark, tmp_path,
     monkeypatch.setattr(pq, "write_table", torn)
     with pytest.raises(OSError):
         commit("usage")
-    assert pipeline.completed_sinks(spark, d) == {"leads"}
+    assert pipeline.completed_sinks(d) == {"leads"}
