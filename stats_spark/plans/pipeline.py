@@ -23,6 +23,7 @@ import os
 import threading
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -201,6 +202,22 @@ BW_COLS = ["conv_id", "format", "cutoff", "short", "singles",
            "leads_ok", "lead_p1", "lead_p2", "w_p1", "w_p2", "matchups"]
 
 
+@contextmanager
+def _described(spark: SparkSession, layer: str, name: str):
+    """Every Spark job this thread submits inside the block carries the
+    job description ``stats:<layer>:<name>``, so the event log names
+    the layer and sink of each job.  A job description is a per-thread
+    local property and the pools' threads start with none; the
+    thread's previous one is restored on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"stats:{layer}:{name}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
+
+
 def _holder(spark: SparkSession, cache: bool, stage_dir: str | None,
             held: dict):
     """``hold(df, name)`` for one strategy: the frame, live, recorded
@@ -212,8 +229,9 @@ def _holder(spark: SparkSession, cache: bool, stage_dir: str | None,
             if name not in STAGED:
                 return df
             path = os.path.join(stage_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
+            with _described(spark, "hold", name):
+                df.write.mode("overwrite").parquet(path)
+                df = spark.read.parquet(path)
             # a compact staged frame (few dozen MB) packs into 1-2 scan
             # splits under maxPartitionBytes, and the explode-heavy
             # consumers then run their whole pre-shuffle CPU on one
@@ -228,7 +246,8 @@ def _holder(spark: SparkSession, cache: bool, stage_dir: str | None,
     elif cache:
         def hold(df: DataFrame, name: str) -> DataFrame:
             df = df.cache()
-            df.count()
+            with _described(spark, "hold", name):
+                df.count()
             held[name] = df
             return df
     else:
@@ -495,23 +514,24 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
     done = completed_sinks(out_dir) if resume else set()
 
     bpath = os.path.join(out_dir, "battles")
-    if resume and os.path.exists(os.path.join(bpath, "_SUCCESS")):
-        battles = spark.read.parquet(bpath)
-        t_parse = 0.0
-    else:
-        tr = tables.load_transcripts(spark, corpus_paths)
-        cv = tables.load_conversations(spark, corpus_paths)
-        # S5 checkpoint: compact columnar intermediate, partitioned on
-        # the routing key; downstream re-reads it (resume point).  2×
-        # parallelism: the encode+compress cost per output task is
-        # conversation-length skewed, so exactly-one-wave writes idle ~2
-        # cores behind the longest task (event-log audit: 5.9/8 busy
-        # cores during the checkpoint write at 1.2M)
-        n_out = max(8, spark.sparkContext.defaultParallelism * 2)
-        (parse_battles(tr, cv).repartition(n_out, "format", "conv_id")
-         .write.mode("overwrite").partitionBy("format").parquet(bpath))
-        battles = spark.read.parquet(bpath)
-        t_parse = time.time() - t0
+    with _described(spark, "checkpoint", "battles"):
+        if resume and os.path.exists(os.path.join(bpath, "_SUCCESS")):
+            battles = spark.read.parquet(bpath)
+            t_parse = 0.0
+        else:
+            tr = tables.load_transcripts(spark, corpus_paths)
+            cv = tables.load_conversations(spark, corpus_paths)
+            # S5 checkpoint: compact columnar intermediate, partitioned on
+            # the routing key; downstream re-reads it (resume point).  2×
+            # parallelism: the encode+compress cost per output task is
+            # conversation-length skewed, so exactly-one-wave writes idle ~2
+            # cores behind the longest task (event-log audit: 5.9/8 busy
+            # cores during the checkpoint write at 1.2M)
+            n_out = max(8, spark.sparkContext.defaultParallelism * 2)
+            (parse_battles(tr, cv).repartition(n_out, "format", "conv_id")
+             .write.mode("overwrite").partitionBy("format").parquet(bpath))
+            battles = spark.read.parquet(bpath)
+            t_parse = time.time() - t0
 
     todo = [s for s in (sinks or SINKS) if s not in done]
     metrics = [dict(partition=s, path=os.path.join(out_dir, s), rows=-1,
@@ -553,9 +573,10 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
             max(2, min(6, spark.sparkContext.defaultParallelism // 4)))
 
         def write_sink(s: str) -> list[dict]:
-            df = _plan(s, {}, futs)
-            with slots:
-                return [write_df(s, df)]
+            with _described(spark, "sink", s):
+                df = _plan(s, {}, futs)
+                with slots:
+                    return [write_df(s, df)]
 
         # the usage family chains off ONE aggregation: usage_tagged's
         # 'total' shard IS usage_by_species column-for-column, so usage
@@ -570,13 +591,15 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
             with slots:
                 for s in ladder:
                     parent = PLANS[s][0]
-                    # a parent's parquet only when this run wrote it or
-                    # the ledger commits it — never a previous run's
-                    if parent in done or parent in (m["partition"]
-                                                    for m in out):
-                        frames[parent] = spark.read.parquet(
-                            os.path.join(out_dir, parent))
-                    out.append(write_df(s, _plan(s, frames, futs)))
+                    with _described(spark, "sink", s):
+                        # a parent's parquet only when this run wrote it
+                        # or the ledger commits it — never a previous
+                        # run's
+                        if parent in done or parent in (m["partition"]
+                                                        for m in out):
+                            frames[parent] = spark.read.parquet(
+                                os.path.join(out_dir, parent))
+                        out.append(write_df(s, _plan(s, frames, futs)))
             return out
 
         # longest-ladder-first submission: the usage ladder is a serial

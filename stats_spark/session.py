@@ -83,6 +83,28 @@ LOCAL_SQL_CONF = {
     "spark.sql.files.openCostInBytes": str(512 * 1024),
 }
 
+# The file:// filesystem — LOCAL FACTORY ONLY (get_spark below).  pyspark
+# ships no native Hadoop library, and without it RawLocalFileSystem sets
+# each permission by running a `chmod` child process: one for every
+# directory it creates and every part, .crc and _SUCCESS file it writes
+# (456 in a warm 400-conversation reaggregate job on local[4], whose
+# median fell from 7.0 to 5.9 s without them).
+# jvm/statsspark/fs/NoSpawnLocalFileSystem.java
+# subclasses LocalFileSystem and sets the same rwx bits with one syscall;
+# it keeps the checksum layer (.crc files written and verified on read)
+# and every resulting mode (a sticky-bit mode still takes the stock
+# path).  The jar is prebuilt and committed (jvm/build.py) so start-up
+# compiles nothing.  Only the driver JVM gets it: the submit path and
+# multi-executor launches write to cluster storage, and their executors
+# would not have the jar.  When stats_spark runs from the --py-files zip
+# there is no jar beside it, and the stock filesystem stays.
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "jvm", "localfs.jar")
+LOCALFS_CONF = {
+    "spark.driver.extraClassPath": LOCALFS_JAR,
+    "spark.hadoop.fs.file.impl": "statsspark.fs.NoSpawnLocalFileSystem",
+}
+
 
 def get_submit_spark(app_name: str = "stats_spark_job",
                      extra_conf: dict | None = None) -> SparkSession:
@@ -153,7 +175,10 @@ def get_spark(
         # on identical local[8] runs)
         .config("spark.driver.extraJavaOptions", EXECUTOR_JVM_FLAGS)
     )
-    for k, v in {**SQL_CONF, **LOCAL_SQL_CONF}.items():
+    local = {**SQL_CONF, **LOCAL_SQL_CONF}
+    if os.path.isfile(LOCALFS_JAR):
+        local.update(LOCALFS_CONF)
+    for k, v in local.items():
         builder = builder.config(k, v)
     evlog = os.environ.get("STATS_SPARK_EVLOG")
     if evlog:
