@@ -88,13 +88,13 @@ LOCAL_SQL_CONF = {
 # each permission by running a `chmod` child process: one for every
 # directory it creates and every part, .crc and _SUCCESS file it writes
 # (456 in a warm 400-conversation reaggregate job on local[4], whose
-# median fell from 7.0 to 5.9 s without them).
-# jvm/statsspark/fs/NoSpawnLocalFileSystem.java
-# subclasses LocalFileSystem and sets the same rwx bits with one syscall;
-# it keeps the checksum layer (.crc files written and verified on read)
-# and every resulting mode (a sticky-bit mode still takes the stock
-# path).  The jar is prebuilt and committed (jvm/build.py) so start-up
-# compiles nothing.  Only the driver JVM gets it: the submit path and
+# median fell from 7.0 to 5.9 s without them).  The class in
+# jvm/statsspark/fs/NoSpawnLocalFileSystem.java subclasses
+# LocalFileSystem and sets the same rwx bits with one syscall.  It keeps
+# the checksum layer (.crc files written and verified on read) and every
+# resulting mode (a sticky-bit mode still takes the stock path).  The
+# jar is prebuilt and committed (jvm/build.py), so start-up compiles
+# nothing.  Only the driver JVM gets it: the submit path and
 # multi-executor launches write to cluster storage, and their executors
 # would not have the jar.  When stats_spark runs from the --py-files zip
 # there is no jar beside it, and the stock filesystem stays.
